@@ -380,12 +380,10 @@ class IndexConfig:
                 f"got {self.proximity_precision!r}"
             )
         if self.ranking_rules is not None:
-            from meilibridge_spark.operators.ranking import (
-                parse_ranking_rules,
-            )
+            from meilibridge_spark.operators.ranking import resolve_ranking
 
             try:
-                parse_ranking_rules(self.ranking_rules)
+                resolve_ranking(self)
             except ValueError as e:
                 raise ConfigError(str(e)) from None
         if self.faceting_sort_by not in ("alpha", "count"):

@@ -64,7 +64,8 @@ def federated_search(
     scale); a target whose analyzer yields no tokens serves
     PURE-SEMANTIC hits ((1 + cos) / 2) instead of being skipped. A
     per-target ``filter_docs`` in ``per_index_kwargs`` composes with
-    the hybrid form too.
+    the hybrid form too (pure-semantic hits included); any other
+    per-target key on a hybrid target raises ``ValueError``.
     """
     if not targets:
         raise ValueError("federated_search needs at least one target")
@@ -83,9 +84,26 @@ def federated_search(
             from meilibridge_spark.operators.hybrid import search_hybrid
             from meilibridge_spark.operators.similarity import cosine_topk
 
+            unsupported = sorted(set(kw) - {"filter_docs"})
+            if unsupported:
+                raise ValueError(
+                    f"hybrid target {uid!r}: per_index_kwargs "
+                    f"{unsupported} do not compose with query_vec; "
+                    "only 'filter_docs' does"
+                )
+            filter_docs = kw.get("filter_docs")
             if n_q == 0:
                 # no indexable tokens: the target serves pure semantic
-                # hits — (1 + cos) / 2 is its ranking score
+                # hits — (1 + cos) / 2 is its ranking score; a filter
+                # left-semi-restricts the embeddings before scoring
+                if filter_docs is not None:
+                    emb = emb.join(
+                        filter_docs.select(
+                            F.col("doc_id").cast("long").alias("vec_id")
+                        ),
+                        "vec_id",
+                        "left_semi",
+                    )
                 qdf = emb.sparkSession.createDataFrame(
                     [("q", [float(x) for x in query_vec])],
                     "query_id string, query_vec array<double>",
@@ -102,7 +120,7 @@ def federated_search(
                 hy = search_hybrid(
                     index, emb, query, list(query_vec), k=kk,
                     semantic_ratio=semantic_ratio, pool=max(pool, kk),
-                    filter_docs=kw.get("filter_docs"),
+                    filter_docs=filter_docs,
                 )
                 sem = hy.select(
                     "doc_id", F.col("hybrid").alias("_rs")

@@ -180,7 +180,17 @@ def multi_search(
                 "model-agnostic — embed upstream)"
             )
         if "vector" in req:
-            bad = [kk for kk in _HYBRID_INCOMPATIBLE if req.get(kk)]
+            # paging keys count by presence: hits_per_page=0 is the
+            # count-only form, not an absent option
+            bad = [
+                kk
+                for kk in _HYBRID_INCOMPATIBLE
+                if (
+                    req.get(kk) is not None
+                    if kk in ("page", "hits_per_page")
+                    else req.get(kk)
+                )
+            ]
             if bad:
                 raise ValueError(
                     f"request {i}: vector/hybrid does not compose "

@@ -12,8 +12,12 @@ composed AT the position of the ``sort`` rule (Meilisearch semantics)
 instead of as a post-hoc override.
 
 Activation contract (documented deviation-free mapping onto this
-engine's optional index tables): a listed built-in rule participates
-only when its data exists —
+engine's optional index tables), applied by :func:`resolve_ranking` —
+the one place every search path turns its options into an order. The
+legacy ``*_rank`` flags are parse-time sugar over this list: with no
+list given, the flags activate criteria over ``DEFAULT_RANKING_RULES``
+(an explicit flag whose data is absent is the caller's error). With a
+list, a listed built-in rule participates only when its data exists —
 
 - ``words``      — always (matched_terms is always computed);
 - ``typo``       — when the caller supplied ``orig_terms`` (without a
@@ -23,7 +27,8 @@ only when its data exists —
   attrs blocks (byAttribute);
 - ``attribute``  — when the index was built ``with_attributes=True``;
 - ``sort``       — when the query carries ``sort`` parameters (exactly
-  Meilisearch: the sort rule is a no-op for queries without ``sort``);
+  Meilisearch: the sort rule is a no-op for queries without ``sort``;
+  this holds for the flag form too);
 - ``exactness``  — when the caller supplied ``exact_terms`` (same
   constant-column argument as ``typo``).
 
@@ -35,6 +40,8 @@ semantics).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -164,3 +171,98 @@ def compose_order(
         elif name == "exactness":
             order.append(F.col("exact_form").desc())
     return order
+
+
+class RankingPlan(NamedTuple):
+    """A resolved ranking order: rule ``tokens`` (parse_ranking_rules
+    form), the ``active`` built-in criteria, the docs ``doc_fields``
+    the order joins in (rules_doc_fields) and the query's
+    ``sort_params``."""
+
+    tokens: "list[tuple]"
+    active: "dict[str, bool]"
+    doc_fields: "list[str]"
+    sort_params: "list[tuple[str, bool]] | None" = None
+
+    @property
+    def score_only(self) -> bool:
+        """Nothing orders hits ahead of (score desc, doc_id asc)."""
+        return not any(self.active.values()) and all(
+            t[0] == "builtin" for t in self.tokens
+        )
+
+    def order(self, matched: bool = True) -> "list[Column]":
+        """The composed sort key (compose_order). ``matched=False`` is
+        the placeholder form: nothing matched, so every matching
+        criterion is vacuously inactive and only the doc-field rules
+        (custom rules, an active ``sort``) order the candidates."""
+        active = (
+            self.active if matched else {"sort": self.active.get("sort")}
+        )
+        return compose_order(self.tokens, active, self.sort_params)
+
+
+def resolve_ranking(
+    cfg,
+    index=None,
+    ranking_rules: "list[str] | tuple[str, ...] | None" = None,
+    sort_params: "list[tuple[str, bool]] | None" = None,
+    *,
+    words: "bool | None" = None,
+    typo: bool = False,
+    proximity: bool = False,
+    attribute: bool = False,
+    exactness: bool = False,
+    typo_data: bool = False,
+    exact_data: bool = False,
+) -> RankingPlan:
+    """Resolve one query's ranking order (module docstring contract).
+
+    The list is ``ranking_rules``, else ``cfg.ranking_rules``. Without
+    one, the legacy flags (``words`` defaulting to
+    ``cfg.words_ranking``) activate criteria over
+    ``DEFAULT_RANKING_RULES`` — rank-identical to the flag chain, and
+    with no ``sort_params`` no doc field is needed. With one, the list
+    decides: a listed built-in is active when its data exists —
+    ``typo_data`` / ``exact_data`` from the query, proximity and
+    attribute from ``index``'s tables (``index=None``: none). Raises
+    ``ValueError`` on an invalid list or, given ``index``, on rule /
+    sort fields missing from its docs table."""
+    rules = ranking_rules if ranking_rules is not None else cfg.ranking_rules
+    tokens = parse_ranking_rules(
+        DEFAULT_RANKING_RULES if rules is None else rules
+    )
+    if rules is None:
+        active = {
+            "words": cfg.words_ranking if words is None else words,
+            "typo": typo,
+            "proximity": proximity,
+            "attribute": attribute,
+            "exactness": exactness,
+        }
+    else:
+        attrs = index is not None and index.attrs is not None
+        data = {
+            "words": True,
+            "typo": typo_data,
+            "proximity": index is not None
+            and (
+                index.positions is not None
+                or (cfg.proximity_precision == "byAttribute" and attrs)
+            ),
+            "attribute": attrs,
+            "exactness": exact_data,
+        }
+        listed = {t[1] for t in tokens if t[0] == "builtin"}
+        active = {name: name in listed and ok for name, ok in data.items()}
+    active["sort"] = bool(sort_params) and any(
+        t == ("builtin", "sort") for t in tokens
+    )
+    fields = rules_doc_fields(tokens, sort_params)
+    if fields and index is not None:
+        missing = set(fields) - set(index.docs.columns)
+        if missing:
+            raise ValueError(
+                f"ranking rule / sort fields not in docs: {sorted(missing)}"
+            )
+    return RankingPlan(tokens, active, fields, sort_params)

@@ -39,12 +39,7 @@ from meilibridge_spark.functions.wand import (
     wand_topk,
     wand_topk_budgeted,
 )
-from meilibridge_spark.operators.ranking import (
-    DEFAULT_RANKING_RULES,
-    compose_order,
-    parse_ranking_rules,
-    rules_doc_fields,
-)
+from meilibridge_spark.operators.ranking import RankingPlan, resolve_ranking
 from meilibridge_spark.sources.tables import InvertedIndex
 
 DECODED_SCHEMA = "term string, doc_id long, tf long, dl long"
@@ -52,6 +47,15 @@ DECODED_SCHEMA = "term string, doc_id long, tf long, dl long"
 #: base scorer output; Q11 criteria append int columns (matched,
 #: best_attr, exact_form) in search_many's rank_cols order
 SCORED_SCHEMA = "qkey string, doc_id long, score double"
+
+#: batch rank_cols entry per built-in criterion: (scorer column, output
+#: column, ascending); 'typo' is single-path only, 'sort' a doc field
+_BATCH_CRITERIA = {
+    "words": ("matched", "matched_terms", False),
+    "proximity": ("prox", "prox_cost", True),
+    "attribute": ("best_attr", "best_attr", True),
+    "exactness": ("exact_form", "exact_form", False),
+}
 
 #: per-pair proximity cost cap for the batch path — MUST equal
 #: operators.positions.PROX_MAX (importing it here would be circular:
@@ -244,7 +248,9 @@ def search(
     participate and their order — the ``*_rank`` flags then only supply
     side data (``orig_terms`` for typo, ``exact_terms`` for exactness);
     a listed rule whose data is absent is skipped (see
-    operators/ranking.py's activation contract). Custom-rule fields are
+    operators/ranking.py's activation contract). Without a list the
+    flags activate criteria over DEFAULT_RANKING_RULES (both forms
+    resolve through ``ranking.resolve_ranking``). Custom-rule fields are
     joined from the docs table and returned as output columns.
 
     ``sort_params`` ([(field, ascending)], Q9/Meilisearch ``sort``
@@ -316,34 +322,17 @@ def search(
     k = k or index.cfg.max_total_hits
     if offset < 0:
         raise ValueError(f"offset must be >= 0, got {offset}")
-    if words_rank is None:
-        words_rank = index.cfg.words_ranking
-    rules = (
-        ranking_rules
-        if ranking_rules is not None
-        else index.cfg.ranking_rules
+    ranking = resolve_ranking(
+        index.cfg, index, ranking_rules, sort_params,
+        words=words_rank, typo=typo_rank, proximity=proximity_rank,
+        attribute=attribute_rank, exactness=exactness_rank,
+        typo_data=orig_terms is not None,
+        exact_data=exact_terms is not None,
     )
-    if rules is not None:
-        # rules-list mode: the list decides activation AND order
-        # (operators/ranking.py activation contract)
-        listed = {
-            t[1] for t in parse_ranking_rules(rules) if t[0] == "builtin"
-        }
-        words_rank = "words" in listed
-        typo_rank = "typo" in listed and orig_terms is not None
-        proximity_rank = "proximity" in listed and (
-            index.positions is not None
-            or (
-                index.cfg.proximity_precision == "byAttribute"
-                and index.attrs is not None
-            )
-        )
-        attribute_rank = "attribute" in listed and index.attrs is not None
-        exactness_rank = "exactness" in listed and exact_terms is not None
-    elif sort_params:
-        # no explicit list: compose sort at its DEFAULT rule position
-        rules = DEFAULT_RANKING_RULES
-    rule_tokens = parse_ranking_rules(rules) if rules is not None else None
+    typo_rank = ranking.active["typo"]
+    proximity_rank = ranking.active["proximity"]
+    attribute_rank = ranking.active["attribute"]
+    exactness_rank = ranking.active["exactness"]
     if typo_rank and orig_terms is None:
         raise ValueError("typo_rank requires orig_terms")
     if exactness_rank and exact_terms is None:
@@ -526,51 +515,16 @@ def search(
                     F.col("prox_cost"), F.lit(PROX_MAX * len(pairs))
                 ).cast("int"),
             )
-    if rule_tokens is not None:
-        # rules-list mode (or legacy + sort_params): the user list is
-        # the composed order; custom-rule / sort fields join in from
-        # docs (one doc_id equi-join, AQE-sized — candidates are
-        # posting-sized)
-        need_fields = rules_doc_fields(rule_tokens, sort_params)
-        if need_fields:
-            missing = set(need_fields) - set(index.docs.columns)
-            if missing:
-                raise ValueError(
-                    "ranking rule / sort fields not in docs: "
-                    f"{sorted(missing)}"
-                )
-            agg = agg.join(
-                index.docs.select("doc_id", *need_fields), "doc_id", "left"
-            )
-        active = {
-            "words": words_rank,
-            "typo": typo_rank,
-            "proximity": proximity_rank,
-            "attribute": attribute_rank,
-            "sort": bool(sort_params),
-            "exactness": exactness_rank,
-        }
-        order = compose_order(rule_tokens, active, sort_params) + [
-            F.col("score").desc(),
-            F.col("doc_id").asc(),
-        ]
-    else:
-        order = [F.col("score").desc(), F.col("doc_id").asc()]
-        # reference rule order words > typo > proximity > attribute >
-        # exactness composes by inserting in REVERSE priority at the head
-        if exactness_rank:
-            order.insert(0, F.col("exact_form").desc())
-        if attribute_rank:
-            order.insert(0, F.col("best_attr").asc())
-        if proximity_rank:
-            order.insert(0, F.col("prox_cost").asc())
-        if typo_rank:
-            order.insert(0, F.col("matched_exact").desc())
-        if words_rank:
-            order.insert(0, F.col("matched_terms").desc())
+    if ranking.doc_fields:
+        # custom-rule / sort fields join in from docs (one doc_id
+        # equi-join, AQE-sized — candidates are posting-sized)
+        agg = agg.join(
+            index.docs.select("doc_id", *ranking.doc_fields), "doc_id", "left"
+        )
+    order = ranking.order() + [F.col("score").desc(), F.col("doc_id").asc()]
     if matching_strategy == "frequency" and groups is not None:
         # the frequency words criterion outranks every other rule
-        order.insert(0, F.col("freq_level").asc())
+        order = [F.col("freq_level").asc()] + order
     ordered = agg.orderBy(*order)
     if page is not None or hits_per_page is not None:
         return _paginate_exhaustive(
@@ -714,25 +668,8 @@ def placeholder_search(
     k = k or index.cfg.max_total_hits
     if offset < 0:
         raise ValueError(f"offset must be >= 0, got {offset}")
-    rules = (
-        ranking_rules
-        if ranking_rules is not None
-        else index.cfg.ranking_rules
-    )
-    if rules is None and sort_params:
-        rules = DEFAULT_RANKING_RULES
-    rule_tokens = parse_ranking_rules(rules) if rules is not None else None
-    need_fields = (
-        rules_doc_fields(rule_tokens, sort_params)
-        if rule_tokens is not None
-        else []
-    )
-    if need_fields:
-        missing = set(need_fields) - set(index.docs.columns)
-        if missing:
-            raise ValueError(
-                f"ranking rule / sort fields not in docs: {sorted(missing)}"
-            )
+    ranking = resolve_ranking(index.cfg, index, ranking_rules, sort_params)
+    need_fields = ranking.doc_fields
     cand = index.docs.select("doc_id", *need_fields)
     if filter_docs is not None:
         cand = cand.join(
@@ -744,11 +681,7 @@ def placeholder_search(
         )
     # matching criteria are vacuously inactive (nothing matched); the
     # sort slot stays active when the query carries sort params
-    order = (
-        compose_order(rule_tokens, {"sort": bool(sort_params)}, sort_params)
-        if rule_tokens is not None
-        else []
-    ) + [F.col("doc_id").asc()]
+    order = ranking.order(matched=False) + [F.col("doc_id").asc()]
     out = (
         cand.withColumn("score", F.lit(0.0))
         .withColumn("matched_terms", F.lit(0))
@@ -1001,11 +934,11 @@ def _restrict_terms_to_attrs(
     attr blocks (dictionary compounds spanning attribute boundaries)
     have no allowed docs and drop entirely (documented deviation).
     Negated terms' ban offsets are snapshotted BEFORE this restriction
-    (factories build ban_src): a negation excludes corpus-wide like the
-    single-query exclude_docs path — the restriction narrows what can
-    MATCH, never what a negation excludes — and a term that is positive
-    in one query and negated in another stays restricted for scoring
-    while banning from its full posting."""
+    (_make_shard_body builds ban_src): a negation excludes corpus-wide
+    like the single-query exclude_docs path — the restriction narrows
+    what can MATCH, never what a negation excludes — and a term that is
+    positive in one query and negated in another stays restricted for
+    scoring while banning from its full posting."""
     out: "dict[str, tuple[np.ndarray, np.ndarray]]" = {}
     allow = np.zeros(shard_range, dtype=bool)
     for term, (o, imp) in per_term.items():
@@ -1489,7 +1422,7 @@ def _out_cols(out_q, out_d, out_s, extras) -> "dict[str, np.ndarray]":
     return cols
 
 
-def _make_shard_scorer(
+def _make_shard_body(
     plan: "list[tuple[str, list[tuple[int, float]]]]",
     qkeys: "list[str]",
     shard_range: int,
@@ -1513,27 +1446,29 @@ def _make_shard_scorer(
     ) = None,
     count_only: bool = False,
 ):
-    """Per-partition scatter-gather scorer (document-partitioned search,
-    the standard sharded-index query architecture).
+    """The batch scatter-gather's per-shard scoring (document-
+    partitioned search, the standard sharded-index query architecture)
+    -> ``score(rows, attr_rows, base, mask=None, pos_map=None)``
+    returning _score_shard's (out_q, out_d, out_s, extras).
 
-    ``prox_pairs`` on THIS (no-right-side) path implies
-    ``prox_attr=True``: byAttribute proximity needs only the attr
-    blocks already riding the exchange; byWord proximity needs the
-    cogrouped positional side (_make_filtered_shard_scorer).
+    One shard's input: ``rows`` = its compressed score blocks for the
+    batch's query terms, ``attr_rows`` = its attribute-mask blocks
+    (operators/attrs.py; empty unless the request needs them),
+    ``mask`` = the allowed-doc bitmap of a filter (applied at decode
+    time; BM25 stats stay corpus-global, Meilisearch filter semantics)
+    and ``pos_map`` = the positional rows of the byWord proximity pair
+    terms and negative-phrase terms (_positions_shard_map). Each term
+    is decoded ONCE with its idf folded into the BM25 impact, then
+    every query's scores accumulate into a dense (queries x
+    shard_range) float64 array — doc offsets within a shard index
+    directly, so accumulation is pure numpy scatter-add. Exact
+    per-query local top-k is selected under the composed Q11 criteria
+    key; only n_shards*k rows per query leave the partition.
 
-    Input rows: compressed posting blocks of the batch's query terms,
-    shuffled so one doc-shard's blocks land in one partition. For each
-    shard: decode each term ONCE, precompute its idf-independent BM25
-    impact, then accumulate every query's scores into a dense
-    (queries x shard_range) float64 array — doc offsets within a shard
-    index directly, so accumulation is pure numpy scatter-add. Exact
-    per-query local top-k is selected per shard under the composed Q11
-    criteria key; only n_shards*k rows per query leave the partition.
-
-    With ``attr_rank``, input rows carry a ``bkind`` column: 0 = score
-    blocks, 1 = attribute-rank blocks (operators/attrs.py) co-shuffled
-    in the same exchange (no extra doc-granular traffic).
-    """
+    byAttribute proximity (``prox_attr``) reads its pair costs from the
+    attr blocks' raw masks instead of ``pos_map`` — no positional side.
+    Negated terms' ban offsets are snapshotted before the
+    ``search_on_mask`` restriction (see _restrict_terms_to_attrs)."""
     term_plan: dict[str, list[tuple[int, float]]] = dict(plan)
     idf_of = {t: i for terms in term_plan.values() for t, i in terms}
     if forbid_terms:
@@ -1549,6 +1484,51 @@ def _make_shard_scorer(
         else None
     )
 
+    def score(rows, attr_rows, base: int, mask=None, pos_map=None):
+        per_term = _decode_shard_terms(
+            rows, base, avgdl, k1, b, mask=mask, idf_map=idf_of
+        )
+        per_attr = (
+            _decode_shard_attrs(attr_rows, base, search_on_mask)
+            if attr_rank or search_on_mask is not None
+            else None
+        )
+        # byWord proximity and negative-phrase bans share the same
+        # positional rows; byAttribute proximity takes attr masks while
+        # phrase bans keep the real slots
+        pos_of = pos_map if prox_pairs is not None else None
+        if prox_pairs is not None and prox_attr:
+            pos_of = _decode_shard_attr_masks(attr_rows, base)
+        ban_src = None
+        if forbid_all is not None:
+            ban_src = {
+                t: per_term[t][0] for t in forbid_all if t in per_term
+            }
+        if search_on_mask is not None:
+            per_term = _restrict_terms_to_attrs(
+                per_term, per_attr, shard_range
+            )
+        return _score_shard(
+            per_term, term_plan, qkeys, shard_range, base, k, query_chunk,
+            track_matched, per_attr if attr_rank else None, attr_rank,
+            exact_sets, require_groups, freq_groups,
+            forbid_terms=forbid_terms, ban_src=ban_src,
+            prox_pairs=prox_pairs, pos_of=pos_of, prox_attr=prox_attr,
+            crit_order=crit_order, forbid_phrases=forbid_phrases,
+            phrase_pos=pos_map if forbid_phrases is not None else None,
+            count_only=count_only,
+        )
+
+    return score
+
+
+def _make_shard_scorer(score, shard_range: int):
+    """``mapInPandas`` adapter over a _make_shard_body ``score``: input
+    rows are the batch's compressed blocks, partitioned so one
+    doc-shard's blocks land in one partition; a ``bkind`` column marks
+    attribute-mask blocks (1) co-shuffled with the score blocks (0) in
+    the same exchange (no extra doc-granular traffic)."""
+
     def scorer(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         # buffer the partition's (compressed) blocks grouped by shard
         by_shard: "dict[int, list]" = {}
@@ -1562,41 +1542,10 @@ def _make_shard_scorer(
                 else:
                     by_shard.setdefault(shard, []).append(row)
         for shard in sorted(by_shard):
-            base = shard * shard_range
-            per_term = _decode_shard_terms(
-                by_shard[shard], base, avgdl, k1, b, idf_map=idf_of
-            )
-            per_attr = (
-                _decode_shard_attrs(
-                    attr_by_shard.get(shard, ()), base, search_on_mask
-                )
-                if attr_rank or search_on_mask is not None
-                else None
-            )
-            pos_of = None
-            if prox_pairs is not None:
-                # byAttribute proximity: raw masks from the co-shuffled
-                # attr blocks, no extra exchange
-                pos_of = _decode_shard_attr_masks(
-                    attr_by_shard.get(shard, ()), base
-                )
-            ban_src = None
-            if forbid_all is not None:
-                ban_src = {
-                    t: per_term[t][0] for t in forbid_all if t in per_term
-                }
-            if search_on_mask is not None:
-                per_term = _restrict_terms_to_attrs(
-                    per_term, per_attr, shard_range
-                )
-            out_q, out_d, out_s, extras = _score_shard(
-                per_term, term_plan, qkeys, shard_range, base, k, query_chunk,
-                track_matched, per_attr if attr_rank else None, attr_rank,
-                exact_sets, require_groups, freq_groups,
-                forbid_terms=forbid_terms, ban_src=ban_src,
-                prox_pairs=prox_pairs, pos_of=pos_of, prox_attr=prox_attr,
-                crit_order=crit_order, forbid_phrases=forbid_phrases,
-                count_only=count_only,
+            out_q, out_d, out_s, extras = score(
+                by_shard[shard],
+                attr_by_shard.get(shard, ()),
+                shard * shard_range,
             )
             if out_q:
                 yield pd.DataFrame(_out_cols(out_q, out_d, out_s, extras))
@@ -1605,141 +1554,51 @@ def _make_shard_scorer(
 
 
 def _make_filtered_shard_scorer(
-    plan: "list[tuple[str, list[tuple[int, float]]]]",
-    qkeys: "list[str]",
-    shard_range: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-    k: int,
-    query_chunk: int = 64,
-    track_matched: bool = False,
-    attr_rank: bool = False,
-    exact_sets: "dict[str, frozenset] | None" = None,
-    require_groups: "dict[str, list[list[str]]] | None" = None,
-    freq_groups: "dict[str, list[tuple[int, list[str]]]] | None" = None,
-    search_on_mask: "int | None" = None,
-    forbid_terms: "dict[str, list[str]] | None" = None,
-    prox_pairs: "dict[str, list[tuple[str, str]]] | None" = None,
-    prox_attr: bool = False,
-    has_filter: bool = True,
-    crit_order: "list[str] | None" = None,
-    forbid_phrases: (
-        "dict[str, list[tuple[tuple[str, int], ...]]] | None"
-    ) = None,
-    count_only: bool = False,
+    score, shard_range: int, columns: "list[str]", has_filter: bool
 ):
-    """Cogrouped variant of the shard scorer for filtered and/or
-    proximity-ranked batch search: key = doc-shard; left = the shard's
-    compressed posting blocks, right = the shard's allowed doc_ids
-    from ``filter_docs`` and/or (rows flagged ``_ispos``) the pair
-    terms' positional postings for the Q11 'proximity' criterion. The
-    allowed set becomes a shard-local boolean mask applied at decode
-    time; BM25 stats stay corpus-global (Meilisearch filter
-    semantics). With ``has_filter``, a shard with blocks but no
-    allowed docs emits nothing; a shard with allowed docs but no
-    blocks has no candidates by construction; positions-only right
-    sides (``has_filter=False``) score unmasked — a shard with no
-    positional rows just ranks every pair at the worst cost. With
-    ``attr_rank`` the left side also carries attribute-rank blocks
-    marked bkind=1 (attr ranks of docs the mask later drops are
-    harmless: their scores stay 0)."""
-    term_plan: dict[str, list[tuple[int, float]]] = dict(plan)
-    idf_of = {t: i for terms in term_plan.values() for t, i in terms}
-    if forbid_terms:
-        # see _make_shard_scorer: ban-mask-only terms fold idf 0
-        for ts in forbid_terms.values():
-            for t in ts:
-                idf_of.setdefault(t, 0.0)
-    forbid_all = (
-        frozenset(t for ts in forbid_terms.values() for t in ts)
-        if forbid_terms
-        else None
-    )
-    empty_cols: dict = {"qkey": [], "doc_id": [], "score": []}
-    if freq_groups is not None:
-        empty_cols["freq_level"] = []
-    if track_matched:
-        empty_cols["matched"] = []
-    if prox_pairs is not None:
-        empty_cols["prox"] = []
-    if attr_rank:
-        empty_cols["best_attr"] = []
-    if exact_sets is not None:
-        empty_cols["exact_form"] = []
-    empty = pd.DataFrame(empty_cols)
+    """Cogroup adapter over a _make_shard_body ``score`` for filtered
+    and/or positional batch search: key = doc-shard; left = the shard's
+    compressed blocks (``bkind`` as in _make_shard_scorer), right = the
+    shard's allowed doc_ids from ``filter_docs`` and/or (rows flagged
+    ``_ispos``) the positional rows of the byWord proximity pair terms
+    and negative-phrase terms. The allowed set becomes the shard-local
+    decode mask. With ``has_filter``, a shard with blocks but no
+    allowed docs emits nothing; a shard with allowed docs but no blocks
+    has no candidates by construction; positions-only right sides
+    (``has_filter=False``) score unmasked — a shard with no positional
+    rows just ranks every pair at the worst cost. Attr ranks of docs
+    the mask drops are harmless: their scores stay 0. ``columns``: the
+    scored schema's column names (empty-shard frame)."""
+    empty = pd.DataFrame({c: [] for c in columns})
 
     def scorer(key, blocks_pdf: pd.DataFrame, right_pdf: pd.DataFrame) -> pd.DataFrame:
         if blocks_pdf.empty:
             return empty
         base = int(key[0]) * shard_range
-        if (
-            (prox_pairs is not None and not prox_attr)
-            or forbid_phrases is not None
-        ) and "_ispos" in right_pdf.columns:
+        pos_map = None
+        filt_pdf = right_pdf
+        if "_ispos" in right_pdf.columns:
             ispos = right_pdf["_ispos"].to_numpy(dtype=bool)
             pos_pdf = right_pdf[ispos]
             filt_pdf = right_pdf[~ispos]
-        else:
-            pos_pdf = None
-            filt_pdf = right_pdf
-        pos_map = (
-            _positions_shard_map(pos_pdf, base)
-            if pos_pdf is not None and not pos_pdf.empty
-            else {}
-        )
-        # byWord proximity and negative-phrase bans share the same
-        # positional rows; byAttribute proximity overwrites pos_of
-        # below with attr masks while phrase bans keep the real slots
-        phrase_pos = pos_map if forbid_phrases is not None else None
-        pos_of = pos_map if prox_pairs is not None else None
+            pos_map = (
+                {} if pos_pdf.empty else _positions_shard_map(pos_pdf, base)
+            )
         mask = None
         if has_filter:
             if filt_pdf.empty:
                 return empty
             mask = np.zeros(shard_range, dtype=bool)
             mask[filt_pdf["doc_id"].to_numpy(dtype=np.int64) - base] = True
+        attr_rows: "list" = []
         if "bkind" in blocks_pdf.columns:
-            attr_pdf = blocks_pdf[blocks_pdf["bkind"] == 1]
+            attr_rows = list(
+                blocks_pdf[blocks_pdf["bkind"] == 1].itertuples(index=False)
+            )
             blocks_pdf = blocks_pdf[blocks_pdf["bkind"] == 0]
-        else:
-            attr_pdf = None
-        per_term = _decode_shard_terms(
-            blocks_pdf.itertuples(index=False), base, avgdl, k1, b,
-            mask=mask, idf_map=idf_of,
-        )
-        per_attr = (
-            _decode_shard_attrs(
-                attr_pdf.itertuples(index=False), base, search_on_mask
-            )
-            if (attr_rank or search_on_mask is not None)
-            and attr_pdf is not None
-            else None
-        )
-        if prox_pairs is not None and prox_attr:
-            pos_of = _decode_shard_attr_masks(
-                attr_pdf.itertuples(index=False)
-                if attr_pdf is not None
-                else (),
-                base,
-            )
-        ban_src = None
-        if forbid_all is not None:
-            ban_src = {
-                t: per_term[t][0] for t in forbid_all if t in per_term
-            }
-        if search_on_mask is not None:
-            per_term = _restrict_terms_to_attrs(
-                per_term, per_attr or {}, shard_range
-            )
-        out_q, out_d, out_s, extras = _score_shard(
-            per_term, term_plan, qkeys, shard_range, base, k, query_chunk,
-            track_matched, per_attr if attr_rank else None, attr_rank,
-            exact_sets, require_groups, freq_groups,
-            forbid_terms=forbid_terms, ban_src=ban_src,
-            prox_pairs=prox_pairs, pos_of=pos_of, prox_attr=prox_attr,
-            crit_order=crit_order, forbid_phrases=forbid_phrases,
-            phrase_pos=phrase_pos, count_only=count_only,
+        out_q, out_d, out_s, extras = score(
+            blocks_pdf.itertuples(index=False), attr_rows, base,
+            mask=mask, pos_map=pos_map,
         )
         if not out_q:
             return empty
@@ -1754,9 +1613,7 @@ def _neg_only_hits(
     neg_only: "dict[str, tuple[list[str], list[str]]]",
     k_all: int,
     filter_docs: "DataFrame | None",
-    rule_tokens: "list[tuple] | None",
-    sort_params: "list[tuple[str, bool]] | None",
-    need_fields: "list[str]",
+    ranking: RankingPlan,
 ) -> DataFrame:
     """Union placeholder hits for negative-ONLY batch queries onto the
     scored result: per query, ALL documents minus its exclusion set
@@ -1773,11 +1630,8 @@ def _neg_only_hits(
     )
 
     # matching criteria vacuously inactive; sort stays active
-    order = (
-        compose_order(rule_tokens, {"sort": bool(sort_params)}, sort_params)
-        if rule_tokens is not None
-        else []
-    ) + [F.col("doc_id").asc()]
+    order = ranking.order(matched=False) + [F.col("doc_id").asc()]
+    need_fields = ranking.doc_fields
     base = index.docs.select("doc_id", *need_fields)
     if filter_docs is not None:
         base = base.join(
@@ -2032,53 +1886,22 @@ def search_many(
         # live — they decide membership. Dedup gets STRONGER here:
         # queries differing only in ranking inputs (exact form, word
         # order) legitimately share one count key.
-        words_rank = False
-        attribute_rank = proximity_rank = exactness_rank = False
-        ranking_rules = None
-        sort_params = None
-    if words_rank is None:
-        words_rank = index.cfg.words_ranking
-    rules = (
-        None
-        if _count_only
-        else (
-            ranking_rules
-            if ranking_rules is not None
-            else index.cfg.ranking_rules
+        ranking = RankingPlan([], {}, [])
+    else:
+        # 'typo' never activates here — the typo CRITERION is
+        # single-path only (documented above); exactness data is each
+        # query's own typed form (or its exact_terms entry)
+        ranking = resolve_ranking(
+            index.cfg, index, ranking_rules, sort_params,
+            words=words_rank, proximity=proximity_rank,
+            attribute=attribute_rank, exactness=exactness_rank,
+            exact_data=True,
         )
-    )
-    if rules is not None:
-        # rules-list mode: the list decides activation and order (see
-        # operators/ranking.py); 'typo' is skipped — the typo
-        # CRITERION is single-path only (documented above)
-        listed = {
-            t[1] for t in parse_ranking_rules(rules) if t[0] == "builtin"
-        }
-        words_rank = "words" in listed
-        proximity_rank = "proximity" in listed and (
-            index.positions is not None
-            or (
-                index.cfg.proximity_precision == "byAttribute"
-                and index.attrs is not None
-            )
-        )
-        attribute_rank = "attribute" in listed and index.attrs is not None
-        exactness_rank = "exactness" in listed
-    elif sort_params:
-        # no explicit list: compose sort at its DEFAULT rule position
-        rules = DEFAULT_RANKING_RULES
-    rule_tokens = parse_ranking_rules(rules) if rules is not None else None
-    need_fields = (
-        rules_doc_fields(rule_tokens, sort_params)
-        if rule_tokens is not None
-        else []
-    )
-    if need_fields:
-        missing = set(need_fields) - set(index.docs.columns)
-        if missing:
-            raise ValueError(
-                f"ranking rule / sort fields not in docs: {sorted(missing)}"
-            )
+    words_rank = ranking.active.get("words", False)
+    proximity_rank = ranking.active.get("proximity", False)
+    attribute_rank = ranking.active.get("attribute", False)
+    exactness_rank = ranking.active.get("exactness", False)
+    need_fields = ranking.doc_fields
     if attribute_rank and index.attrs is None:
         raise ValueError(
             "attribute_rank requires an index built with "
@@ -2386,34 +2209,18 @@ def search_many(
             for t in ts
         }
     )
-    # ordered Q11 criteria ahead of (score desc, doc_id asc): reference
-    # rule order words > (typo: single-path only) > proximity >
-    # attribute > exactness, or the user rule list's order
+    # ordered Q11 criteria ahead of (score desc, doc_id asc), in the
+    # resolved rule order (typo: single-path only)
     rank_cols: "list[tuple[str, str, bool]]" = []
     if freq_groups is not None:
         # the frequency words criterion outranks every other rule
         rank_cols.append(("freq_level", "freq_level", True))
-    if rule_tokens is not None:
-        for tok in rule_tokens:
-            if tok[0] != "builtin":
-                continue
-            if tok[1] == "words" and words_rank:
-                rank_cols.append(("matched", "matched_terms", False))
-            elif tok[1] == "proximity" and proximity_rank:
-                rank_cols.append(("prox", "prox_cost", True))
-            elif tok[1] == "attribute" and attribute_rank:
-                rank_cols.append(("best_attr", "best_attr", True))
-            elif tok[1] == "exactness" and exactness_rank:
-                rank_cols.append(("exact_form", "exact_form", False))
-    else:
-        if words_rank:
-            rank_cols.append(("matched", "matched_terms", False))
-        if proximity_rank:
-            rank_cols.append(("prox", "prox_cost", True))
-        if attribute_rank:
-            rank_cols.append(("best_attr", "best_attr", True))
-        if exactness_rank:
-            rank_cols.append(("exact_form", "exact_form", False))
+    rank_cols += [
+        _BATCH_CRITERIA[tok[1]]
+        for tok in ranking.tokens
+        if tok[0] == "builtin" and ranking.active.get(tok[1])
+        and tok[1] in _BATCH_CRITERIA
+    ]
     scored_schema = SCORED_SCHEMA + "".join(
         f", {c} int" for c, _, _ in rank_cols
     )
@@ -2424,8 +2231,7 @@ def search_many(
         # uniformly at the end
         if neg_only:
             res = _neg_only_hits(
-                index, res, neg_only, k_all, filter_docs,
-                rule_tokens, sort_params, need_fields,
+                index, res, neg_only, k_all, filter_docs, ranking
             )
         return res.filter(F.col("rank") > offset) if offset else res
 
@@ -2448,7 +2254,14 @@ def search_many(
     # the global ranking stage — a doc attribute can reorder across
     # any shard-local cut, so local truncation is off (see docstring)
     k_local = (1 << 31) - 1 if need_fields else k_all
-    scorer_kw = dict(
+    score_shard = _make_shard_body(
+        plan,
+        qkeys,
+        index.cfg.shard_range,
+        index.avgdl,
+        index.cfg.k1,
+        index.cfg.b,
+        k_local,
         track_matched=words_rank,
         attr_rank=attribute_rank,
         exact_sets=exact_sets,
@@ -2456,19 +2269,14 @@ def search_many(
         freq_groups=freq_groups,
         search_on_mask=search_on_mask,
         forbid_terms=forbid_live,
-        forbid_phrases=phrase_live,
+        prox_pairs=prox_sets,
+        prox_attr=prox_attr,
         crit_order=[c for c, _, _ in rank_cols],
+        forbid_phrases=phrase_live,
         count_only=_count_only,
     )
-    if proximity_rank:
-        scorer_kw["prox_pairs"] = prox_sets
-        scorer_kw["prox_attr"] = prox_attr
-
-    if (
-        filter_docs is not None
-        or (proximity_rank and not prox_attr)
-        or phrase_live
-    ):
+    pos_side = (proximity_rank and not prox_attr) or bool(phrase_live)
+    if filter_docs is not None or pos_side:
         shard_of = lambda c: F.floor(c / F.lit(index.cfg.shard_range)).cast("long")  # noqa: E731
         blocks, _ = _batch_blocks(
             index, fetch_terms, need_attr_blocks, keep_shard=True
@@ -2485,7 +2293,7 @@ def search_many(
             right = filter_docs.select(
                 F.col("doc_id").cast("long").alias("doc_id")
             ).withColumn("_shard", shard_of(F.col("doc_id")))
-        if (proximity_rank and not prox_attr) or phrase_live:
+        if pos_side:
             # positional rows riding the cogrouped side: the byWord
             # 'proximity' pair terms and/or the negative-phrase terms,
             # pruned at the scan and cogrouped by the SAME doc-shard
@@ -2532,77 +2340,47 @@ def search_many(
             .cogroup(right.groupBy("_shard"))
             .applyInPandas(
                 _make_filtered_shard_scorer(
-                    plan,
-                    qkeys,
+                    score_shard,
                     index.cfg.shard_range,
-                    index.avgdl,
-                    index.cfg.k1,
-                    index.cfg.b,
-                    k_local,
+                    ["qkey", "doc_id", "score", *(c for c, _, _ in rank_cols)],
                     has_filter=filter_docs is not None,
-                    **scorer_kw,
                 ),
                 schema=scored_schema,
             )
         )
-        if _count_only:
-            return _gather_counts(
-                index, per_key, key_of, filter_docs, neg_only, spark
-            )
-        if need_fields:
-            res = _gather_hits_rules(
-                index, per_key, key_of, qkeys, k_all, rank_cols,
-                rule_tokens, sort_params, need_fields,
-            )
-        else:
-            res = _gather_hits(
-                index, per_key, key_of, qkeys, k_all, gather, rank_cols
-            )
-        return _finish(res)
-
-    sharded, needs_shuffle = _batch_blocks(
-        index, fetch_terms, need_attr_blocks
-    )
-    if needs_shuffle:
-        # partition count: no more than the corpus' shard count (extra
-        # partitions would be empty tasks), no more than the session's
-        # shuffle width. Per-partition memory is the batch's compressed
-        # query-term postings / n_parts — size shuffle.partitions so
-        # that fits the executor at the target scale.
-        n_shards = max(1, -(-index.n_docs // index.cfg.shard_range))
-        n_parts = min(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")), n_shards
+    else:
+        sharded, needs_shuffle = _batch_blocks(
+            index, fetch_terms, need_attr_blocks
         )
-        sharded = sharded.repartition(
-            n_parts, F.floor(F.col("first_doc") / F.lit(index.cfg.shard_range))
+        if needs_shuffle:
+            # partition count: no more than the corpus' shard count
+            # (extra partitions would be empty tasks), no more than the
+            # session's shuffle width. Per-partition memory is the
+            # batch's compressed query-term postings / n_parts — size
+            # shuffle.partitions so that fits the executor at the
+            # target scale.
+            n_shards = max(1, -(-index.n_docs // index.cfg.shard_range))
+            n_parts = min(
+                int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+                n_shards,
+            )
+            sharded = sharded.repartition(
+                n_parts,
+                F.floor(F.col("first_doc") / F.lit(index.cfg.shard_range)),
+            )
+        per_key = sharded.mapInPandas(
+            _make_shard_scorer(score_shard, index.cfg.shard_range),
+            schema=scored_schema,
         )
-    per_key = sharded.mapInPandas(
-        _make_shard_scorer(
-            plan,
-            qkeys,
-            index.cfg.shard_range,
-            index.avgdl,
-            index.cfg.k1,
-            index.cfg.b,
-            k_local,
-            **scorer_kw,
-        ),
-        schema=scored_schema,
-    )
     if _count_only:
         return _gather_counts(
             index, per_key, key_of, filter_docs, neg_only, spark
         )
-    if need_fields:
-        res = _gather_hits_rules(
-            index, per_key, key_of, qkeys, k_all, rank_cols,
-            rule_tokens, sort_params, need_fields,
+    return _finish(
+        _gather_hits(
+            index, per_key, key_of, qkeys, k_all, gather, rank_cols, ranking
         )
-    else:
-        res = _gather_hits(
-            index, per_key, key_of, qkeys, k_all, gather, rank_cols
-        )
-    return _finish(res)
+    )
 
 
 def _gather_counts(
@@ -2918,7 +2696,8 @@ def _gather_hits(
     qkeys: "list[str]",
     k: int,
     gather: str,
-    rank_cols: "list[tuple[str, str, bool]] | None" = None,
+    rank_cols: "list[tuple[str, str, bool]]",
+    ranking: RankingPlan,
 ) -> DataFrame:
     """Merge per-shard local top-k rows (qkey, doc_id, score [, Q11
     criteria columns]) into the global per-query top-k and fan deduped
@@ -2927,7 +2706,17 @@ def _gather_hits(
     ``rank_cols``: ordered criteria ahead of (score desc, doc_id asc)
     as (scorer_col, output_col, ascending) — e.g.
     [("matched", "matched_terms", False), ("best_attr", "best_attr",
-    True)] — the same composed key the shard-local top-k used.
+    True)] — the same composed key the shard-local top-k used, which
+    the window merge takes from ``ranking`` (plus ``freq_level`` ahead
+    of it when present).
+
+    ``ranking.doc_fields`` (custom ``field:asc|desc`` rules, an active
+    ``sort``): the shard scorers emitted ALL candidate rows (truncation
+    off — a doc field can reorder across any local cut), the fields
+    join in from docs here (one doc_id equi-join) and the window merge
+    applies the composed order. Candidate-sized, like
+    Meilisearch's own sort criterion walking the full candidate bitmap;
+    only candidate rows (not the corpus) reach the window.
 
     ``gather``: 'driver' | 'window' | 'tree' | 'auto' (auto switches
     driver vs window on DRIVER_GATHER_MAX_ROWS; above TREE_MERGE_SHARDS
@@ -2943,25 +2732,32 @@ def _gather_hits(
     """
     from pyspark.sql.window import Window
 
-    rank_cols = rank_cols or []
     spark = per_key.sparkSession
+    for in_c, out_c, _ in rank_cols:
+        if in_c != out_c:
+            per_key = per_key.withColumnRenamed(in_c, out_c)
+    out_names = [o for _, o, _ in rank_cols]
+    doc_fields = ranking.doc_fields
     n_shards = max(1, -(-index.n_docs // index.cfg.shard_range))
-    if gather == "auto" and n_shards > TREE_MERGE_SHARDS:
+    if doc_fields:
+        per_key = per_key.join(
+            index.docs.select(
+                F.col("doc_id").cast("long").alias("doc_id"), *doc_fields
+            ),
+            "doc_id",
+            "left",
+        )
+        gather = "window"
+    elif gather == "auto" and n_shards > TREE_MERGE_SHARDS:
         gather = "tree"
-    out_schema = (
-        "query_id string, doc_id long, score double"
-        + "".join(f", {o} int" for _, o, _ in rank_cols)
-        + ", rank int"
-    )
     if gather == "driver" or (
         gather == "auto" and n_shards * k * len(qkeys) <= DRIVER_GATHER_MAX_ROWS
     ):
         rows = per_key.collect()
         by_key: "dict[str, list]" = {key: [] for key in qkeys}
-        in_cols = [c for c, _, _ in rank_cols]
         for r in rows:
             by_key[r["qkey"]].append(
-                (r["doc_id"], r["score"], *(r[c] for c in in_cols))
+                (r["doc_id"], r["score"], *(r[c] for c in out_names))
             )
 
         def sort_key(t):
@@ -2980,11 +2776,16 @@ def _gather_hits(
                 (qid, int(d), float(sc), *(int(x) for x in rest), rank)
                 for rank, (d, sc, *rest) in enumerate(hits, start=1)
             )
+        out_schema = (
+            "query_id string, doc_id long, score double"
+            + "".join(f", {o} int" for o in out_names)
+            + ", rank int"
+        )
         return spark.createDataFrame(out, out_schema)
 
-    order = [
-        (F.col(c).asc() if asc else F.col(c).desc()) for c, _, asc in rank_cols
-    ] + [F.col("score").desc(), F.col("doc_id").asc()]
+    order = (
+        [F.col("freq_level").asc()] if "freq_level" in out_names else []
+    ) + ranking.order() + [F.col("score").desc(), F.col("doc_id").asc()]
 
     if gather == "tree":
         w_local = Window.partitionBy("qkey", "_salt").orderBy(*order)
@@ -3003,74 +2804,9 @@ def _gather_hits(
     mapping = spark.createDataFrame(
         list(key_of.items()), "query_id string, qkey string"
     )
-    out_cols = ["query_id", "doc_id", "score"]
-    joined = ranked.join(F.broadcast(mapping), "qkey")
-    for in_c, out_c, _ in rank_cols:
-        if in_c != out_c:
-            joined = joined.withColumnRenamed(in_c, out_c)
-        out_cols.append(out_c)
-    return joined.select(*out_cols, "rank")
-
-
-def _gather_hits_rules(
-    index: InvertedIndex,
-    per_key: DataFrame,
-    key_of: "dict[str, str]",
-    qkeys: "list[str]",
-    k: int,
-    rank_cols: "list[tuple[str, str, bool]]",
-    rule_tokens: "list[tuple]",
-    sort_params: "list[tuple[str, bool]] | None",
-    need_fields: "list[str]",
-) -> DataFrame:
-    """Global ranking stage for rules-list batches with doc-field rules
-    (custom ``field:asc|desc`` or an active ``sort`` slot): the shard
-    scorers emitted ALL candidate rows (truncation off — a doc field
-    can reorder across any local cut), the fields join in from docs
-    here (one doc_id equi-join), and a per-qkey window applies the
-    composed order. Candidate-sized, like Meilisearch's own sort
-    criterion walking the full candidate bitmap; only candidate rows
-    (not the corpus) reach the window."""
-    from pyspark.sql.window import Window
-
-    spark = per_key.sparkSession
-    for in_c, out_c, _ in rank_cols:
-        if in_c != out_c:
-            per_key = per_key.withColumnRenamed(in_c, out_c)
-    per_key = per_key.join(
-        index.docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"), *need_fields
-        ),
-        "doc_id",
-        "left",
+    return ranked.join(F.broadcast(mapping), "qkey").select(
+        "query_id", "doc_id", "score", *out_names, *doc_fields, "rank"
     )
-    order: "list" = []
-    if rank_cols and rank_cols[0][0] == "freq_level":
-        order.append(F.col("freq_level").asc())
-    active = {
-        "words": any(o == "matched_terms" for _, o, _ in rank_cols),
-        "typo": False,
-        "proximity": any(o == "prox_cost" for _, o, _ in rank_cols),
-        "attribute": any(o == "best_attr" for _, o, _ in rank_cols),
-        "sort": bool(sort_params),
-        "exactness": any(o == "exact_form" for _, o, _ in rank_cols),
-    }
-    order += compose_order(rule_tokens, active, sort_params)
-    order += [F.col("score").desc(), F.col("doc_id").asc()]
-    w = Window.partitionBy("qkey").orderBy(*order)
-    ranked = per_key.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    mapping = spark.createDataFrame(
-        list(key_of.items()), "query_id string, qkey string"
-    )
-    out_cols = (
-        ["query_id", "doc_id", "score"]
-        + [o for _, o, _ in rank_cols]
-        + need_fields
-        + ["rank"]
-    )
-    return ranked.join(F.broadcast(mapping), "qkey").select(*out_cols)
 
 
 #: prepare_serving prefetches the term -> df map to the driver only
@@ -3625,6 +3361,12 @@ class DriverSearcher:
     hot Zipf terms make the memo hit rate high by construction). Both
     modes are rank-identical (tested). Cache capacity bounds postings
     memory either way.
+
+    The searcher ranks by BM25 score alone, so an index whose settings
+    order hits by anything else (``words_ranking``, or a
+    ``ranking_rules`` list with a criterion active without per-query
+    data) is rejected at construction rather than answered in a
+    different order than ``search`` / ``search_many``.
     """
 
     def __init__(
@@ -3635,6 +3377,13 @@ class DriverSearcher:
     ) -> None:
         from collections import OrderedDict
 
+        if not resolve_ranking(index.cfg, index).score_only:
+            raise ValueError(
+                "DriverSearcher ranks by BM25 score only, but index "
+                f"{index.cfg.index_name!r} orders hits by its ranking "
+                "settings (words_ranking / ranking_rules); use search or "
+                "search_many"
+            )
         self.index = index
         self._df_memo: "dict[str, int | None]" = {}
         if (

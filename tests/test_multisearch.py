@@ -655,3 +655,53 @@ def test_federated_hybrid_semantic_only_target(idxs, emb_a):
         query_vec=HY_QV, embeddings={"a": emb_a},
     ).collect()
     assert [r.doc_id for r in rows2] == [2, 4, 1]
+
+
+def test_federated_semantic_only_target_respects_filter(idxs, emb_a):
+    """A stop-word-only query on a filtered hybrid target (the n_q == 0
+    pure-semantic branch) returns only the filter's allowed docs."""
+    import dataclasses
+
+    from meilibridge_spark.functions.filters import filter_doc_ids
+    from meilibridge_spark.operators.federation import federated_search
+
+    a = idxs["a"]
+    a = dataclasses.replace(
+        a,
+        cfg=dataclasses.replace(
+            a.cfg,
+            analyzer=AnalyzerConfig.make(
+                token_pattern=ASCII_TOKEN_PATTERN, stop_words=["the"]
+            ),
+        ),
+    )
+    allowed = filter_doc_ids(a, "lang = 'en'")
+    rows = federated_search(
+        [("a", a, 1.0)], "the", k=3,
+        per_index_kwargs={"a": {"filter_docs": allowed}},
+        query_vec=HY_QV, embeddings={"a": emb_a},
+    ).collect()
+    # allowed ids with embeddings: 0, 1, 4 (doc 2, the unfiltered top
+    # hit, is 'de'); cosine order vs (1, 0): 4, 1, 0
+    assert [r.doc_id for r in rows] == [4, 1, 0]
+
+
+def test_federated_hybrid_rejects_unsupported_target_kwargs(idxs, emb_a):
+    from meilibridge_spark.operators.federation import federated_search
+
+    with pytest.raises(ValueError, match="do not compose with query_vec"):
+        federated_search(
+            [("a", idxs["a"], 1.0)], "spark", k=3,
+            per_index_kwargs={"a": {"attributes_to_search_on": ("text",)}},
+            query_vec=HY_QV, embeddings={"a": emb_a},
+        )
+
+
+def test_multi_search_vector_rejects_count_only_paging(idxs, emb_a):
+    # hits_per_page=0 (count-only) is present, not absent
+    for paging in ({"hits_per_page": 0}, {"page": 1}):
+        with pytest.raises(ValueError, match="does not compose"):
+            multi_search(idxs, [
+                {"index_uid": "a", "q": "join", "vector": HY_QV,
+                 **paging},
+            ], embeddings={"a": emb_a})

@@ -365,3 +365,93 @@ def test_get_settings_defaults_rules(spark, built, tmp_index_dir):
     save_snapshot(built, tmp_index_dir)
     got = get_settings(tmp_index_dir)
     assert got["rankingRules"] == list(DEFAULT_RANKING_RULES)
+
+
+# ------------------------------------------ flags == default rule list
+
+FLAG_QUERIES = [
+    ("q1", "spark join"),
+    ("q2", "spark optimizer statistics"),
+    ("q3", "join"),
+]
+
+
+@pytest.mark.parametrize("sort", [None, [("lang", True)]])
+def test_flags_equal_default_rules_single(built, sort):
+    # the *_rank flags are sugar over DEFAULT_RANKING_RULES: same side
+    # data, same hits, same criteria columns, same order
+    side = dict(orig_terms=["spark"], exact_terms=["spark", "join"])
+    cols = ["doc_id", "matched_terms", "matched_exact", "best_attr",
+            "exact_form"]
+    flags = search(
+        built, "spark join", 10, words_rank=True, typo_rank=True,
+        attribute_rank=True, exactness_rank=True, sort_params=sort, **side,
+    )
+    rules = search(
+        built, "spark join", 10, ranking_rules=DEFAULT_RANKING_RULES,
+        sort_params=sort, **side,
+    )
+    assert flags.columns == rules.columns
+    got = [c for c in cols + ["lang"] if c in flags.columns]
+    sel = [*got, F.round("score", 6).alias("s")]
+    assert _pairs(flags.select(*sel), got + ["s"]) == _pairs(
+        rules.select(*sel), got + ["s"]
+    )
+
+
+@pytest.mark.parametrize("sort", [None, [("lang", True)]])
+def test_flags_equal_default_rules_batch(built, sort):
+    cols = ["query_id", "rank", "doc_id", "matched_terms", "best_attr",
+            "exact_form"]
+    flags = search_many(
+        built, FLAG_QUERIES, 10, words_rank=True, attribute_rank=True,
+        exactness_rank=True, sort_params=sort,
+    )
+    rules = search_many(
+        built, FLAG_QUERIES, 10, ranking_rules=DEFAULT_RANKING_RULES,
+        sort_params=sort,
+    )
+    assert flags.columns == rules.columns
+    got = [c for c in cols + ["lang"] if c in flags.columns]
+
+    def rows(df):
+        return _pairs(
+            df.select(*got, F.round("score", 6).alias("s")).orderBy(
+                "query_id", "rank"
+            ),
+            got + ["s"],
+        )
+
+    assert rows(flags) == rows(rules)
+
+
+def test_explicit_flag_without_data_raises(built):
+    with pytest.raises(ValueError, match="typo_rank requires orig_terms"):
+        search(built, "spark join", 5, typo_rank=True)
+    with pytest.raises(ValueError, match="exactness_rank requires exact"):
+        search(built, "spark join", 5, exactness_rank=True)
+
+
+def test_driver_searcher_rejects_non_score_order(built):
+    import dataclasses
+
+    from meilibridge_spark.operators.search import DriverSearcher
+
+    def with_cfg(**kw):
+        return dataclasses.replace(built, cfg=dataclasses.replace(CFG, **kw))
+
+    for kw in (
+        {"words_ranking": True},
+        {"ranking_rules": ("attribute",)},
+        {"ranking_rules": ("price:desc",)},
+        {"ranking_rules": DEFAULT_RANKING_RULES},
+    ):
+        with pytest.raises(ValueError, match="BM25 score only"):
+            DriverSearcher(with_cfg(**kw))
+    # rules whose data is per-query only (typo, exactness, sort) leave
+    # a query without that data score-ordered: served as before
+    s = DriverSearcher(with_cfg(ranking_rules=("typo", "sort", "exactness")))
+    want = search(built, "spark join", 5).collect()
+    assert [d for d, _ in s.search("spark join", 5)] == [
+        r["doc_id"] for r in want
+    ]
