@@ -43,25 +43,31 @@ def encode_varints(values: np.ndarray) -> bytes:
     return out[mask].tobytes()
 
 
-def decode_varints(buf: bytes) -> np.ndarray:
-    """Inverse of encode_varints -> uint64 array."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
+def _leb128(b: np.ndarray) -> np.ndarray:
+    """LEB128 values of a uint8 buffer -> uint64 array: the codec's one
+    varint decoder. A value ends at each byte without the continuation
+    bit; byte i of a value holds bits 7i..7i+6, so after the first byte
+    only the still-open (multi-byte) values are touched."""
+    ends = np.flatnonzero(b < 0x80)
+    if not ends.size:
         return np.empty(0, dtype=np.uint64)
-    ends = np.nonzero((b & 0x80) == 0)[0]
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    vals = np.zeros(ends.size, dtype=np.uint64)
-    for i in range(10):
-        pos = starts + i
-        valid = pos <= ends
-        if not valid.any():
+    vals = (b[starts] & 0x7F).astype(np.uint64)
+    open_ = np.flatnonzero(ends > starts)
+    for i in range(1, 10):
+        if not open_.size:
             break
-        vals[valid] |= (b[pos[valid]] & np.uint64(0x7F)).astype(np.uint64) << np.uint64(
-            7 * i
-        )
+        pos = starts[open_] + i
+        vals[open_] |= (b[pos] & 0x7F).astype(np.uint64) << np.uint64(7 * i)
+        open_ = open_[ends[open_] > pos]
     return vals
+
+
+def decode_varints(buf: bytes) -> np.ndarray:
+    """Inverse of encode_varints -> uint64 array."""
+    return _leb128(np.frombuffer(buf, dtype=np.uint8))
 
 
 def encode_blocks(
@@ -128,15 +134,57 @@ def encode_blocks(
     return blocks
 
 
+def decode_blocks(
+    first_docs, docs_bins, tfs_bins, dls_bins
+) -> "tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]":
+    """Decode many blocks in one pass -> (doc_ids int64, tfs int64,
+    dls int64, n_per_block int64), the blocks' entries concatenated in
+    input order (equal to concatenating each block's decode_block).
+
+    Varints are self-delimiting, so each field's buffers are joined and
+    decoded by ONE LEB128 pass; a block's entry count is the number of
+    values ending inside its tfs_bin. doc_ids are one cumsum over
+    [first_doc, gaps...] per block, re-based at every block start (exact
+    int64 arithmetic: equal to the per-block first_doc + cumsum(gaps)).
+    One call per shard or fetch instead of three per block: in the
+    scorers the per-call cost, not the bytes, dominated decode."""
+    first = np.asarray(first_docs, dtype=np.int64)
+    nb = first.size
+    tb = np.frombuffer(b"".join(tfs_bins), dtype=np.uint8)
+    tfs = _leb128(tb).astype(np.int64)
+    dls = _leb128(np.frombuffer(b"".join(dls_bins), dtype=np.uint8)).astype(
+        np.int64
+    )
+    gaps = _leb128(np.frombuffer(b"".join(docs_bins), dtype=np.uint8))
+    # values ending inside each block's tfs bytes
+    closed = np.zeros(tb.size + 1, dtype=np.int64)
+    np.cumsum(tb < 0x80, out=closed[1:])
+    byte_off = np.zeros(nb + 1, dtype=np.int64)
+    np.cumsum(
+        np.fromiter(map(len, tfs_bins), dtype=np.int64, count=nb),
+        out=byte_off[1:],
+    )
+    n_per_block = np.diff(closed[byte_off])
+    total = tfs.size
+    if (
+        (nb and n_per_block.min() < 1)
+        or dls.size != total
+        or gaps.size != total - nb
+    ):
+        raise ValueError("malformed posting blocks: field lengths disagree")
+    starts = np.cumsum(n_per_block) - n_per_block
+    x = np.empty(total, dtype=np.int64)
+    is_start = np.zeros(total, dtype=bool)
+    is_start[starts] = True
+    x[starts] = first
+    x[~is_start] = gaps.astype(np.int64)
+    run = np.cumsum(x)
+    doc_ids = run - np.repeat(run[starts] - first, n_per_block)
+    return doc_ids, tfs, dls, n_per_block
+
+
 def decode_block(
     first_doc: int, docs_bin: bytes, tfs_bin: bytes, dls_bin: bytes
 ) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
     """-> (doc_ids int64, tfs int64, dls int64) for one block."""
-    gaps = decode_varints(docs_bin).astype(np.int64)
-    doc_ids = np.empty(gaps.size + 1, dtype=np.int64)
-    doc_ids[0] = first_doc
-    if gaps.size:
-        doc_ids[1:] = first_doc + np.cumsum(gaps)
-    tfs = decode_varints(tfs_bin).astype(np.int64)
-    dls = decode_varints(dls_bin).astype(np.int64)
-    return doc_ids, tfs, dls
+    return decode_blocks([first_doc], [docs_bin], [tfs_bin], [dls_bin])[:3]

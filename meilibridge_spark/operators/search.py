@@ -31,7 +31,12 @@ from pyspark.sql import functions as F
 
 from meilibridge_spark.functions.bm25 import idf as idf_fn
 from meilibridge_spark.functions.bm25 import impact_upper_bound
-from meilibridge_spark.functions.codec import decode_block
+# decode_block (one block) stays a module attribute: perfbench's
+# DriverShims wrap it by name; the scorers here call decode_blocks
+from meilibridge_spark.functions.codec import (  # noqa: F401
+    decode_block,
+    decode_blocks,
+)
 from meilibridge_spark.functions.tokenizer import parse_query
 from meilibridge_spark.functions.wand import (
     TermPostings,
@@ -40,6 +45,7 @@ from meilibridge_spark.functions.wand import (
     wand_topk_budgeted,
 )
 from meilibridge_spark.operators.ranking import RankingPlan, resolve_ranking
+from meilibridge_spark.session import local_frame
 from meilibridge_spark.sources.tables import InvertedIndex
 
 DECODED_SCHEMA = "term string, doc_id long, tf long, dl long"
@@ -102,21 +108,15 @@ def decode_postings(postings: DataFrame) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            terms, docs, tfs, dls = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                d, t, dl = decode_block(
-                    row.first_doc, row.docs_bin, row.tfs_bin, row.dls_bin
-                )
-                terms.append(np.repeat(row.term, d.size))
-                docs.append(d)
-                tfs.append(t)
-                dls.append(dl)
+            d, t, dl, n = decode_blocks(
+                pdf["first_doc"], pdf["docs_bin"], pdf["tfs_bin"], pdf["dls_bin"]
+            )
             yield pd.DataFrame(
                 {
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(docs),
-                    "tf": np.concatenate(tfs),
-                    "dl": np.concatenate(dls),
+                    "term": np.repeat(pdf["term"].to_numpy(), n),
+                    "doc_id": d,
+                    "tf": t,
+                    "dl": dl,
                 }
             )
 
@@ -561,7 +561,7 @@ def _empty_hits(
             ", total_hits long, page int, hits_per_page int,"
             " total_pages int"
         )
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def _paginate_exhaustive(
@@ -783,9 +783,7 @@ def search_count(
         )
     idf_map = _idf_map(index, q_terms)
     if not idf_map:
-        return spark.createDataFrame(
-            [(0, 0)], "total_hits long, total_pages int"
-        )
+        return local_frame(spark, [(0, 0)], "total_hits long, total_pages int")
     groups: "list[list[str]] | None" = None
     if matching_strategy == "all":
         from meilibridge_spark.functions.tokenizer import query_word_groups
@@ -795,8 +793,8 @@ def search_count(
         groups = [[t for t in g if t in present] for g in groups]
         if any(not g for g in groups):
             # a word with no indexed alternates can never be satisfied
-            return spark.createDataFrame(
-                [(0, 0)], "total_hits long, total_pages int"
+            return local_frame(
+                spark, [(0, 0)], "total_hits long, total_pages int"
             )
     if (
         groups is None
@@ -820,7 +818,7 @@ def search_count(
     if groups is not None and len(groups) > 1:
         fetch = sorted({t for g in groups for t in g})
         pairs = [(t, i) for i, g in enumerate(groups) for t in g]
-        gmap = spark.createDataFrame(pairs, "term string, _g int")
+        gmap = local_frame(spark, pairs, "term string, _g int")
         cand = (
             candidate_rows(index, fetch)
             .select("term", "doc_id")
@@ -840,6 +838,47 @@ def search_count(
     return _count_candidates(cand, filter_docs, exclude_docs, cap)
 
 
+def _decode_term_blocks(rows):
+    """One shard's blocks (rows with ``term``, ``first_doc`` and the
+    three ``*_bin`` fields) -> (terms in first-appearance order, each
+    entry's index into them, doc_ids, tfs, dls): every block decoded
+    by ONE decode_blocks call, entries in row order."""
+    rows = rows if isinstance(rows, list) else list(rows)
+    code_of: "dict[str, int]" = {}
+    block_codes = np.fromiter(
+        (code_of.setdefault(r.term, len(code_of)) for r in rows),
+        dtype=np.int64,
+        count=len(rows),
+    )
+    d, t, dl, n = decode_blocks(
+        [r.first_doc for r in rows],
+        [r.docs_bin for r in rows],
+        [r.tfs_bin for r in rows],
+        [r.dls_bin for r in rows],
+    )
+    return list(code_of), np.repeat(block_codes, n), d, t, dl
+
+
+def _split_by_term(
+    terms: "list[str]", codes: np.ndarray, *arrays: np.ndarray
+) -> "dict[str, tuple[np.ndarray, ...]]":
+    """Per-entry arrays -> term -> its entries' slices, for EVERY term
+    (empty when all its entries were dropped). The grouping is stable,
+    so a term's entries keep their block order — each term's arrays
+    equal the per-block concatenation they replace, element for
+    element. Already-grouped input (a term's blocks adjacent, as they
+    usually arrive) is split into views without a sort."""
+    if codes.size and (codes[1:] < codes[:-1]).any():
+        order = np.argsort(codes, kind="stable")
+        codes = codes[order]
+        arrays = tuple(a[order] for a in arrays)
+    bounds = np.searchsorted(codes, np.arange(len(terms) + 1))
+    return {
+        term: tuple(a[bounds[i] : bounds[i + 1]] for a in arrays)
+        for i, term in enumerate(terms)
+    }
+
+
 def _decode_shard_terms(
     rows,
     base: int,
@@ -857,33 +896,20 @@ def _decode_shard_terms(
     drops disallowed doc offsets at decode time, so a filtered batch
     pays the filter once per term instead of once per query.
 
-    Multi-block terms buffer per-block arrays and concatenate ONCE at
-    the end (per-block concatenate onto a growing array is quadratic —
-    a 128-block hot term would copy ~64x the data)."""
-    parts: "dict[str, tuple[list, list]]" = {}
-    for r in rows:
-        d, t, dl = decode_block(
-            r.first_doc, bytes(r.docs_bin), bytes(r.tfs_bin), bytes(r.dls_bin)
-        )
-        # expression kept bit-identical to the single-query JVM path
-        imp = t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * dl / avgdl))
-        if idf_map is not None:
-            imp *= idf_map[r.term]
-        o = d - base
-        if mask is not None:
-            keep = mask[o]
-            o, imp = o[keep], imp[keep]
-        lo, li = parts.setdefault(r.term, ([], []))
-        lo.append(o)
-        li.append(imp)
-    return {
-        term: (
-            (lo[0], li[0])
-            if len(lo) == 1
-            else (np.concatenate(lo), np.concatenate(li))
-        )
-        for term, (lo, li) in parts.items()
-    }
+    All blocks decode in one batched pass and every step is
+    elementwise, so each term's arrays are bit-identical to decoding
+    and scoring its blocks one by one."""
+    terms, codes, d, t, dl = _decode_term_blocks(rows)
+    # expression kept bit-identical to the single-query JVM path
+    imp = t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * dl / avgdl))
+    if idf_map is not None:
+        idf = np.array([idf_map[term] for term in terms], dtype=np.float64)
+        imp *= idf[codes]
+    o = d - base
+    if mask is not None:
+        keep = mask[o]
+        o, imp, codes = o[keep], imp[keep], codes[keep]
+    return _split_by_term(terms, codes, o, imp)
 
 
 def _decode_shard_attrs(
@@ -896,30 +922,20 @@ def _decode_shard_attrs(
     intersected with the requested subset and offsets whose
     intersection is empty are DROPPED — the surviving offsets double as
     the term's allowed-doc set for _restrict_terms_to_attrs, and the
-    rank is the best attribute WITHIN the subset."""
-    per_attr: "dict[str, tuple[np.ndarray, np.ndarray]]" = {}
-    for r in rows:
-        d, t, _ = decode_block(
-            r.first_doc, bytes(r.docs_bin), bytes(r.tfs_bin), bytes(r.dls_bin)
-        )
-        o = d - base
-        if search_on_mask is not None:
-            t = t & search_on_mask
-            keep = t != 0
-            o, t = o[keep], t[keep]
-            if not o.size:
-                continue
-        # ctz via the isolated lowest bit: log2 is exact on powers of 2
-        ranks = np.log2(t & -t).astype(np.int32)
-        prev = per_attr.get(r.term)
-        if prev is None:
-            per_attr[r.term] = (o, ranks)
-        else:
-            per_attr[r.term] = (
-                np.concatenate((prev[0], o)),
-                np.concatenate((prev[1], ranks)),
-            )
-    return per_attr
+    rank is the best attribute WITHIN the subset; a term with no
+    surviving offset is left out."""
+    terms, codes, d, t, _ = _decode_term_blocks(rows)
+    o = d - base
+    if search_on_mask is not None:
+        t = t & search_on_mask
+        keep = t != 0
+        o, t, codes = o[keep], t[keep], codes[keep]
+    # ctz via the isolated lowest bit: log2 is exact on powers of 2
+    ranks = np.log2(t & -t).astype(np.int32)
+    per_attr = _split_by_term(terms, codes, o, ranks)
+    if search_on_mask is None:
+        return per_attr
+    return {term: v for term, v in per_attr.items() if v[0].size}
 
 
 def _restrict_terms_to_attrs(
@@ -1038,21 +1054,8 @@ def _decode_shard_attr_masks(
     attributesToSearchOn intersection): the restriction narrows what
     MATCHES, never which attributes the words live in — single-path
     parity (positions.proximity_costs reads the full attrs table)."""
-    out: "dict[str, tuple[np.ndarray, np.ndarray]]" = {}
-    for r in rows:
-        d, t, _ = decode_block(
-            r.first_doc, bytes(r.docs_bin), bytes(r.tfs_bin), bytes(r.dls_bin)
-        )
-        o = d - base
-        prev = out.get(r.term)
-        if prev is None:
-            out[r.term] = (o, t)
-        else:
-            out[r.term] = (
-                np.concatenate((prev[0], o)),
-                np.concatenate((prev[1], t)),
-            )
-    return out
+    terms, codes, d, t, _ = _decode_term_blocks(rows)
+    return _split_by_term(terms, codes, d - base, t)
 
 
 def _positions_shard_map(
@@ -1847,6 +1850,13 @@ def search_many(
     counts the final single-level merge generalizes to a tree merge;
     at 10^12 turns the per-query merge input is n_shards*k rows,
     which a two-level (salted) merge handles the same way.
+
+    One Spark job: with the driver gather (``gather='driver'``, or
+    ``'auto'`` under DRIVER_GATHER_MAX_ROWS) the scorer stage is the
+    call's only job — the gather collects it inside this call and
+    returns the merged hits as a local relation, so collecting the
+    result runs no further job (tested on the serving layout). The
+    window / tree merges stay lazy and run when the result is read.
     """
     if page is not None or hits_per_page is not None:
         if _count_only:
@@ -2248,7 +2258,7 @@ def search_many(
             )
             + ", rank int"
         )
-        return _finish(spark.createDataFrame([], out_schema))
+        return _finish(local_frame(spark, [], out_schema))
     qkeys = sorted(key for key, _ in plan)
     # doc-field rules (custom / active sort): every candidate reaches
     # the global ranking stage — a doc attribute can reorder across
@@ -2405,8 +2415,8 @@ def _gather_counts(
     cap = index.cfg.max_total_hits
     out: "DataFrame | None" = None
     if key_of:
-        mapping = spark.createDataFrame(
-            list(key_of.items()), "query_id string, qkey string"
+        mapping = local_frame(
+            spark, list(key_of.items()), "query_id string, qkey string"
         )
         if per_key is None:
             out = mapping.select(
@@ -2434,9 +2444,7 @@ def _gather_counts(
             q for q, (nw, nps) in neg_only.items() if not nw and not nps
         )
         if plain:
-            qdf = spark.createDataFrame(
-                [(q,) for q in plain], "query_id string"
-            )
+            qdf = local_frame(spark, [(q,) for q in plain], "query_id string")
             cnt = _count_candidates(docs, filter_docs, None, cap).select(
                 "total_hits"
             )
@@ -2453,7 +2461,7 @@ def _gather_counts(
         if extra is not None:
             out = extra if out is None else out.unionByName(extra)
     if out is None:
-        out = spark.createDataFrame([], "query_id string, total_hits long")
+        out = local_frame(spark, [], "query_id string, total_hits long")
     return out
 
 
@@ -2781,7 +2789,8 @@ def _gather_hits(
             + "".join(f", {o} int" for o in out_names)
             + ", rank int"
         )
-        return spark.createDataFrame(out, out_schema)
+        # a local relation: reading the merged hits runs no second job
+        return local_frame(spark, out, out_schema)
 
     order = (
         [F.col("freq_level").asc()] if "freq_level" in out_names else []
@@ -2801,8 +2810,8 @@ def _gather_hits(
         per_key.withColumn("rank", F.row_number().over(w_global))
         .filter(F.col("rank") <= k)
     )
-    mapping = spark.createDataFrame(
-        list(key_of.items()), "query_id string, qkey string"
+    mapping = local_frame(
+        spark, list(key_of.items()), "query_id string, qkey string"
     )
     return ranked.join(F.broadcast(mapping), "qkey").select(
         "query_id", "doc_id", "score", *out_names, *doc_fields, "rank"
@@ -2877,41 +2886,45 @@ def prepare_serving(
 def _fetch_raw(index: InvertedIndex, terms: "list[str]") -> "dict[str, dict]":
     """Fetch + decode the terms' blocks to the driver (one Spark job),
     keeping the stored per-block (max_tf, min_dl) metadata raw so
-    bounds can be rebuilt under any (idf, avgdl)."""
+    bounds can be rebuilt under any (idf, avgdl). All blocks decode in
+    one decode_blocks call (terms in first-seen order, each term's
+    blocks by block_id); each term then owns copies of its slices, so
+    the searcher's cache bounds memory per term."""
     if not terms:
         return {}
     rows = index.postings.filter(terms_in("term", terms)).collect()
-    by_term: dict[str, list] = {}
+    code_of: "dict[str, int]" = {}
     for r in rows:
-        by_term.setdefault(r["term"], []).append(r)
+        code_of.setdefault(r["term"], len(code_of))
+    rows.sort(key=lambda r: (code_of[r["term"]], r["block_id"]))
+    d, t, dl, n = decode_blocks(
+        [r["first_doc"] for r in rows],
+        [r["docs_bin"] for r in rows],
+        [r["tfs_bin"] for r in rows],
+        [r["dls_bin"] for r in rows],
+    )
+    meta = np.array(
+        [(r["last_doc"], r["max_tf"], r["min_dl"]) for r in rows],
+        dtype=np.int64,
+    ).reshape(-1, 3)
+    block_bounds = np.searchsorted(
+        np.array([code_of[r["term"]] for r in rows], dtype=np.int64),
+        np.arange(len(code_of) + 1),
+    )
+    entry_off = np.zeros(len(rows) + 1, dtype=np.int64)
+    np.cumsum(n, out=entry_off[1:])
     out: dict[str, dict] = {}
-    for term, blks in by_term.items():
-        blks.sort(key=lambda r: r["block_id"])
-        docs, tfs, dls, starts, last_doc, max_tf, min_dl = [], [], [], [], [], [], []
-        off = 0
-        for r in blks:
-            d, t, dl = decode_block(
-                r["first_doc"],
-                bytes(r["docs_bin"]),
-                bytes(r["tfs_bin"]),
-                bytes(r["dls_bin"]),
-            )
-            docs.append(d)
-            tfs.append(t)
-            dls.append(dl)
-            starts.append(off)
-            off += d.size
-            last_doc.append(r["last_doc"])
-            max_tf.append(r["max_tf"])
-            min_dl.append(r["min_dl"])
+    for i, term in enumerate(code_of):
+        lo, hi = block_bounds[i], block_bounds[i + 1]
+        e0, e1 = entry_off[lo], entry_off[hi]
         out[term] = {
-            "doc_ids": np.concatenate(docs),
-            "tfs": np.concatenate(tfs),
-            "dls": np.concatenate(dls),
-            "block_starts": np.asarray(starts, dtype=np.int64),
-            "block_last_doc": np.asarray(last_doc, dtype=np.int64),
-            "max_tf": np.asarray(max_tf, dtype=np.int64),
-            "min_dl": np.asarray(min_dl, dtype=np.int64),
+            "doc_ids": d[e0:e1].copy(),
+            "tfs": t[e0:e1].copy(),
+            "dls": dl[e0:e1].copy(),
+            "block_starts": entry_off[lo:hi] - e0,
+            "block_last_doc": meta[lo:hi, 0].copy(),
+            "max_tf": meta[lo:hi, 1].copy(),
+            "min_dl": meta[lo:hi, 2].copy(),
         }
     return out
 
@@ -3017,7 +3030,7 @@ def _typo_candidate_terms(index: InvertedIndex, typo=None) -> DataFrame:
         return index.terms
     spark = index.postings.sparkSession
     if not attrs:
-        return spark.createDataFrame([], "term string")
+        return local_frame(spark, [], "term string")
     cache: dict = getattr(index, "_typo_term_src", None) or {}
     index._typo_term_src = cache
     key = tuple(attrs)

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from meilibridge_spark.config import IndexConfig
-from meilibridge_spark.functions.codec import decode_block, encode_blocks
+from meilibridge_spark.functions.codec import decode_blocks, encode_blocks
 from meilibridge_spark.operators.docs import assign_doc_ids, make_term_freq_udf
 from meilibridge_spark.operators.postings import (
     POSTING_COLUMNS,
@@ -47,20 +47,13 @@ def _make_merger(block_size: int, shard_range: int):
     def merge(key, old_pdf: pd.DataFrame, delta_pdf: pd.DataFrame) -> pd.DataFrame:
         term = key[0]
         # decode surviving old entries
-        doc_ids = [np.empty(0, dtype=np.int64)]
-        tfs = [np.empty(0, dtype=np.int64)]
-        dls = [np.empty(0, dtype=np.int64)]
-        if not old_pdf.empty:
-            for row in old_pdf.sort_values("block_id").itertuples(index=False):
-                d, t, l = decode_block(
-                    row.first_doc, row.docs_bin, row.tfs_bin, row.dls_bin
-                )
-                doc_ids.append(d)
-                tfs.append(t)
-                dls.append(l)
-        d = np.concatenate(doc_ids)
-        t = np.concatenate(tfs)
-        l = np.concatenate(dls)
+        if old_pdf.empty:
+            d = t = l = np.empty(0, dtype=np.int64)
+        else:
+            old = old_pdf.sort_values("block_id")
+            d, t, l, _ = decode_blocks(
+                old["first_doc"], old["docs_bin"], old["tfs_bin"], old["dls_bin"]
+            )
         touched = delta_pdf["doc_id"].to_numpy(dtype=np.int64)
         keep = ~np.isin(d, touched)
         d, t, l = d[keep], t[keep], l[keep]

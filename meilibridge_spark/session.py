@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_session(
@@ -49,3 +49,27 @@ def build_session(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: "list[tuple]", schema: str) -> DataFrame:
+    """Small driver-built rows -> a DataFrame planned as a
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` parallelizes the rows into a
+    pickled RDD, so every action that reads the frame (collecting it,
+    even empty, or broadcasting it into a join) runs Spark jobs of
+    Python tasks to read rows the driver already holds. An Arrow table
+    goes to the JVM as a local relation instead, and reading it runs no
+    job. ``schema`` is a DDL string, as for ``createDataFrame``. For
+    driver-bounded data only: the rows live in the plan."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

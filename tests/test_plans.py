@@ -87,6 +87,33 @@ def test_serving_search_has_no_upstream_exchange(saved):
         saved.serving = None
 
 
+def test_serving_driver_gather_is_one_job_and_local(saved):
+    """Serving-mode batch with the driver gather: the scorer's collect
+    is the call's only Spark job, and the merged result is a local
+    relation, so collecting it runs none."""
+    prepare_serving(saved)
+    sc = saved.postings.sparkSession.sparkContext
+    queries = [("a", "baba cedi"), ("b", "dila"), ("c", "baba")]
+    group = "test-serving-driver-gather"
+    try:
+        sc.setJobGroup(group, group)
+        try:
+            df = search_many(saved, queries, k=5, gather="driver")
+            rows = df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert rows
+        assert len(jobs) == 1, jobs
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan, plan
+    finally:
+        saved.serving.unpersist()
+        saved.serving = None
+
+
 def test_unbounded_hit_set_is_never_broadcast(saved, spark):
     """The facet/distinct/sort paths are called with k up to 10^6 (all
     matching docs). A hot term at 100 TB matches tens of millions of
