@@ -14,6 +14,14 @@ Usage:
       [--sort attr:asc,attr2:desc] [--distinct] [--proximity] \
       [--tenant-token JWT --keys-file keys.json --master-key K]
 
+Single-query routing: a plain query (no filter/offset/facets/phrases/
+sort/distinct/proximity/pagination) on an index whose ranking settings
+order hits by BM25 score alone is answered on the driver by
+DriverSearcher (--mode wand, the default there; one Spark job fetches
+the query's postings). Any other ranking order takes the DataFrame
+search (--mode df), which honours it; --mode wand then exits with an
+error naming the ranking settings.
+
 Batch mode (one scatter-gather Spark job for the whole file, postings
 served from the doc-shard cached layout):
   ... query.py --index-dir /path/to/index --queries-file qs.txt [-k 10]
@@ -97,7 +105,12 @@ def main() -> None:
                          "facetDistribution block computed over the top "
                          "max_total_hits matching docs (single query only)")
     ap.add_argument("--mode", choices=["df", "wand"], default=None,
-                    help="single-query path (default wand); invalid in batch mode")
+                    help="single-query path: wand = the driver-side "
+                         "scorer (DriverSearcher), df = the DataFrame "
+                         "search. Default: wand when the index's ranking "
+                         "settings order hits by score alone, else df; "
+                         "wand on any other order is an error. Invalid "
+                         "in batch mode")
     ap.add_argument("--cutoff-ms", type=int, default=None,
                     help="searchCutoffMs override for this query "
                          "(default: the index's search_cutoff_ms "
@@ -188,17 +201,16 @@ def main() -> None:
         args.queries_file or args.embeddings
     ):
         ap.error("--sort/--distinct apply to single keyword queries only")
-    mode = args.mode or "wand"
 
     from pyspark.sql import functions as F
 
     from meilibridge_spark.config import IndexConfig
+    from meilibridge_spark.operators.ranking import resolve_ranking
     from meilibridge_spark.operators.search import (
+        DriverSearcher,
         prepare_serving,
         search,
         search_many,
-        search_wand,
-        search_wand_cutoff,
     )
     from meilibridge_spark.session import build_session
     from meilibridge_spark.sources.tables import load_snapshot
@@ -619,8 +631,17 @@ def main() -> None:
                  "--search-on only (DataFrame path; no --offset/"
                  "--sort/--distinct/phrases/negatives/--proximity/"
                  "--mode wand/--cutoff-ms)")
+    # the driver scorer ranks by BM25 score alone: it is the default
+    # only when the index's ranking settings order hits by score; any
+    # other order is the DataFrame search's, which honours them
+    score_only = resolve_ranking(index.cfg, index).score_only
+    if args.mode == "wand" and not score_only:
+        ap.error("--mode wand ranks by BM25 score alone, but this index "
+                 "orders hits by its ranking settings (words_ranking / "
+                 "ranking_rules); use the default mode or --mode df")
     plain_wand = (
-        mode == "wand" and not args.filter_role and not args.filter_expr
+        args.mode != "df" and score_only
+        and not args.filter_role and not args.filter_expr
         and search_on is None and not args.offset and not args.facets
         and not has_phrase and not has_negative and not sort_spec
         and not geo_sort and distinct_attr is None and not args.proximity
@@ -632,15 +653,16 @@ def main() -> None:
         # DataFrame routes have no per-query interrupt point
         # (COVERAGE.md Q15), so an explicit budget there is an error
         ap.error("--cutoff-ms applies to the plain --mode wand path "
-                 "only (no filters/offset/facets/phrases/sort/"
-                 "distinct/proximity)")
+                 "only (score-only ranking settings; no filters/offset/"
+                 "facets/phrases/sort/distinct/proximity)")
     if plain_wand:
-        if args.cutoff_ms is not None or index.cfg.search_cutoff_ms:
-            hits, degraded = search_wand_cutoff(
-                index, query_text, args.k, cutoff_ms=args.cutoff_ms
-            )
-        else:
-            hits = search_wand(index, query_text, args.k)
+        # search_cutoff falls back to the unbudgeted scorer when neither
+        # --cutoff-ms nor the index's search_cutoff_ms is set
+        hits, degraded = DriverSearcher(index).search_cutoff(
+            query_text, args.k, cutoff_ms=args.cutoff_ms
+        )
+        if args.cutoff_ms is None and index.cfg.search_cutoff_ms is None:
+            degraded = None  # unbudgeted: no degraded marker
         out = [{"doc_id": d, "score": round(s, 6)} for d, s in hits]
     else:
         # --search-on routes to the DataFrame path (WAND's block-max

@@ -30,6 +30,7 @@ from meilibridge_spark.operators.relational import (
     ranking_scores,
 )
 from meilibridge_spark.operators.search import InvertedIndex, search
+from meilibridge_spark.session import local_frame
 
 
 def federated_search(
@@ -104,7 +105,8 @@ def federated_search(
                         "vec_id",
                         "left_semi",
                     )
-                qdf = emb.sparkSession.createDataFrame(
+                qdf = local_frame(
+                    emb.sparkSession,
                     [("q", [float(x) for x in query_vec])],
                     "query_id string, query_vec array<double>",
                 )
@@ -158,7 +160,7 @@ def federated_search(
         "ranking_score double, weighted_ranking_score double"
     )
     if not parts:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     merged = parts[0]
     for p in parts[1:]:
         merged = merged.unionByName(p)
@@ -225,7 +227,7 @@ def federated_facets(
         schema = "facet string, value string, count bigint"
         if not merge:
             schema = "index_uid string, " + schema
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     dists = parts[0]
     for p in parts[1:]:
         dists = dists.unionByName(p)
@@ -327,7 +329,7 @@ def network_federated_search(
         "ranking_score double, weighted_ranking_score double"
     )
     if not loaded:
-        return spark.createDataFrame([], schema), remote_errors
+        return local_frame(spark, [], schema), remote_errors
     hits = federated_search(loaded, query, k)
     split = F.split(F.col("index_uid"), "/", 2)
     hits = hits.select(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from meilibridge_spark.operators.search import InvertedIndex, search_many
+from meilibridge_spark.session import local_frame
 
 #: request keys the results-mode endpoint analog accepts
 _ALLOWED_KEYS = {
@@ -259,7 +260,8 @@ def multi_search(
             prefix=pfx,
             proximity_rank=prox,
         )
-        bounds = spark.createDataFrame(
+        bounds = local_frame(
+            spark,
             [
                 (
                     f"r{i}",
@@ -379,7 +381,8 @@ def multi_search(
             k=k_call, semantic_ratio=ratio, pool=pool,
             filter_docs=filter_docs,
         )
-        bounds = spark.createDataFrame(
+        bounds = local_frame(
+            spark,
             [(f"r{i}", int(requests[i].get("k", default_k))) for i in req_nos],
             "query_id string, _k int",
         )
@@ -425,7 +428,8 @@ def multi_search(
             )
             emb = emb.join(allowed, "vec_id", "left_semi")
         k_call = max(requests[i].get("k", default_k) for i in req_nos)
-        qdf = spark.createDataFrame(
+        qdf = local_frame(
+            spark,
             [
                 (f"r{i}", [float(x) for x in requests[i]["vector"]])
                 for i in req_nos
@@ -445,7 +449,8 @@ def multi_search(
             )
         else:
             hits = cosine_topk(emb, qdf, k=k_call, exclude_self=False)
-        bounds = spark.createDataFrame(
+        bounds = local_frame(
+            spark,
             [(f"r{i}", int(requests[i].get("k", default_k))) for i in req_nos],
             "query_id string, _k int",
         )

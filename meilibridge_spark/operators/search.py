@@ -11,9 +11,9 @@ Three paths over the same postings tables, all rank-identical (tested):
                     each shard scores every query in a dense numpy pass
                     and emits local top-k; merge via driver gather /
                     window / tree (see _gather_hits).
-- ``search_wand``   driver-side block-max WAND over the collected term
-                    postings — the serving path; exact (WAND-on ==
-                    WAND-off, FIXTURES.md §6).
+- ``DriverSearcher`` driver-side dense / block-max WAND scoring over
+                    LRU-cached term postings — the serving path; exact
+                    (WAND-on == WAND-off, FIXTURES.md §6).
 
 Scores: sum_t idf(t)·tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)), ordering
 (score desc, doc_id asc); `score` is rounded to 1e-9 only at comparison
@@ -218,7 +218,6 @@ def search(
     exact_terms: "list[str] | None" = None,
     exactness_rank: bool = False,
     matching_strategy: str = "last",
-    word_groups: "list[list[str]] | None" = None,
     attributes_to_search_on: "tuple[str, ...] | None" = None,
     offset: int = 0,
     ranking_rules: "list[str] | tuple[str, ...] | None" = None,
@@ -366,11 +365,7 @@ def search(
     if matching_strategy in ("all", "frequency"):
         from meilibridge_spark.functions.tokenizer import query_word_groups
 
-        groups = (
-            word_groups
-            if word_groups is not None
-            else query_word_groups(query, index.cfg.analyzer)
-        )
+        groups = query_word_groups(query, index.cfg.analyzer)
         present = set(idf_map)
         if matching_strategy == "all":
             groups = [[t for t in g if t in present] for g in groups]
@@ -2821,7 +2816,7 @@ def _gather_hits(
 #: prepare_serving prefetches the term -> df map to the driver only
 #: below this vocabulary size (~40 MB of dict at the limit); larger
 #: vocabularies keep the per-batch terms-scan lookup (memoized per
-#: term) or serve through DriverSearcher's bloom-backed alternative.
+#: term).
 PREFETCH_MAX_TERMS = 2_000_000
 
 
@@ -2846,8 +2841,9 @@ def prepare_serving(
     such a layout just add a narrow bkind=0 filter.
 
     ``prefetch_terms``: also collect the (bounded, see
-    PREFETCH_MAX_TERMS) term -> df dictionary so query planning costs
-    zero Spark jobs — the same trade DriverSearcher makes."""
+    PREFETCH_MAX_TERMS) term -> df dictionary so batch query planning
+    costs zero Spark jobs. DriverSearcher needs no dictionary: it takes
+    idf from the postings it fetches."""
     spark = index.postings.sparkSession
     n = n_parts or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if include_attributes is None:
@@ -2883,13 +2879,18 @@ def prepare_serving(
     return index
 
 
-def _fetch_raw(index: InvertedIndex, terms: "list[str]") -> "dict[str, dict]":
-    """Fetch + decode the terms' blocks to the driver (one Spark job),
-    keeping the stored per-block (max_tf, min_dl) metadata raw so
-    bounds can be rebuilt under any (idf, avgdl). All blocks decode in
-    one decode_blocks call (terms in first-seen order, each term's
-    blocks by block_id); each term then owns copies of its slices, so
-    the searcher's cache bounds memory per term."""
+def _fetch_raw(
+    index: InvertedIndex, terms: "list[str]"
+) -> "dict[str, TermPostings]":
+    """Fetch + decode the terms' blocks to the driver (one Spark job)
+    as scoring-ready :class:`TermPostings`; terms with no blocks are
+    absent from the result. A term's idf comes from its decoded posting
+    count: df is Σ ``n`` over the term's blocks on the build and the
+    CDC path (``operators.postings.term_stats``), so no terms-table
+    lookup is needed. All blocks decode in one decode_blocks call
+    (terms in first-seen order, each term's blocks by block_id); each
+    term then owns copies of its slices, so the searcher's cache
+    bounds memory per term."""
     if not terms:
         return {}
     rows = index.postings.filter(terms_in("term", terms)).collect()
@@ -2913,87 +2914,25 @@ def _fetch_raw(index: InvertedIndex, terms: "list[str]") -> "dict[str, dict]":
     )
     entry_off = np.zeros(len(rows) + 1, dtype=np.int64)
     np.cumsum(n, out=entry_off[1:])
-    out: dict[str, dict] = {}
+    impact = impact_upper_bound(
+        meta[:, 1], meta[:, 2], index.avgdl, index.cfg.k1, index.cfg.b
+    )
+    out: "dict[str, TermPostings]" = {}
     for i, term in enumerate(code_of):
         lo, hi = block_bounds[i], block_bounds[i + 1]
         e0, e1 = entry_off[lo], entry_off[hi]
-        out[term] = {
-            "doc_ids": d[e0:e1].copy(),
-            "tfs": t[e0:e1].copy(),
-            "dls": dl[e0:e1].copy(),
-            "block_starts": entry_off[lo:hi] - e0,
-            "block_last_doc": meta[lo:hi, 0].copy(),
-            "max_tf": meta[lo:hi, 1].copy(),
-            "min_dl": meta[lo:hi, 2].copy(),
-        }
+        idf = float(idf_fn(index.n_docs, int(e1 - e0)))
+        out[term] = TermPostings(
+            term=term,
+            idf=idf,
+            doc_ids=d[e0:e1].copy(),
+            tfs=t[e0:e1].copy(),
+            dls=dl[e0:e1].copy(),
+            block_starts=entry_off[lo:hi] - e0,
+            block_last_doc=meta[lo:hi, 0].copy(),
+            block_ub=idf * impact[lo:hi],
+        )
     return out
-
-
-def _to_term_postings(
-    term: str, raw: dict, idf: float, index: InvertedIndex
-) -> TermPostings:
-    ub = idf * impact_upper_bound(
-        raw["max_tf"], raw["min_dl"], index.avgdl, index.cfg.k1, index.cfg.b
-    )
-    return TermPostings(
-        term=term,
-        idf=idf,
-        doc_ids=raw["doc_ids"],
-        tfs=raw["tfs"],
-        dls=raw["dls"],
-        block_starts=raw["block_starts"],
-        block_last_doc=raw["block_last_doc"],
-        block_ub=np.asarray(ub),
-    )
-
-
-def collect_term_postings(
-    index: InvertedIndex, q_terms: "list[str]"
-) -> "list[TermPostings]":
-    idf_map = _idf_map(index, q_terms)
-    raws = _fetch_raw(index, list(idf_map))
-    return [
-        _to_term_postings(t, raw, idf_map[t], index) for t, raw in raws.items()
-    ]
-
-
-def search_wand(
-    index: InvertedIndex, query: str, k: "int | None" = None
-) -> "list[tuple[int, float]]":
-    """Driver-side exact top-k with block-max WAND pruning."""
-    k = k or index.cfg.max_total_hits
-    q_terms = parse_query(query, index.cfg.analyzer)
-    terms = collect_term_postings(index, q_terms)
-    return wand_topk(terms, k, index.avgdl, index.cfg.k1, index.cfg.b)
-
-
-def search_wand_cutoff(
-    index: InvertedIndex,
-    query: str,
-    k: "int | None" = None,
-    cutoff_ms: "int | None" = None,
-) -> "tuple[list[tuple[int, float]], bool]":
-    """``searchCutoffMs`` analog on the one-shot driver path ->
-    (hits, degraded) — :func:`search_wand` budgeted like
-    :meth:`DriverSearcher.search_cutoff`: ``cutoff_ms`` (explicit,
-    else the index's ``search_cutoff_ms`` setting; None = unbudgeted)
-    spans term fetch + traversal, and a fired deadline returns the
-    exact top-k of the visited doc-id prefix (anytime WAND — never a
-    partially-accumulated score). The term-fetch Spark job itself is
-    not interruptible; an over-budget fetch degrades to the empty
-    prefix, the endpoint's worst-case degraded response."""
-    import time
-
-    cut = cutoff_ms if cutoff_ms is not None else index.cfg.search_cutoff_ms
-    if cut is None:
-        return search_wand(index, query, k), False
-    deadline = time.monotonic() + cut / 1000.0
-    k = k or index.cfg.max_total_hits
-    q_terms = parse_query(query, index.cfg.analyzer)
-    terms = collect_term_postings(index, q_terms)
-    return wand_topk_budgeted(
-        terms, k, index.avgdl, index.cfg.k1, index.cfg.b, deadline=deadline
-    )
 
 
 def _edit_distance(a: str, b: str) -> int:
@@ -3361,19 +3300,18 @@ def prefix_expansion_map(
 
 
 class DriverSearcher:
-    """Low-latency serving path: the term dictionary (term -> df) is
-    collected once (BOUNDED — see below) and the decoded postings of
-    recently-used terms are LRU-cached on the driver, so a warm query
-    costs zero Spark jobs.
+    """Low-latency serving path: the decoded postings of recently-used
+    terms are LRU-cached on the driver, ready to score, so a warm query
+    costs zero Spark jobs and a cold one a single pruned postings scan.
+    Construction runs no Spark job: there is no term dictionary.
 
-    Scale guard: the full-dictionary prefetch only happens below
-    PREFETCH_MAX_TERMS (the same bound ``prepare_serving`` applies).
-    Above it — a 10^8-10^9-term vocabulary would OOM the driver — the
-    searcher falls back to a memoized per-term df lookup against the
-    terms table (one bounded ``isin`` scan per batch of unseen terms;
-    hot Zipf terms make the memo hit rate high by construction). Both
-    modes are rank-identical (tested). Cache capacity bounds postings
-    memory either way.
+    Each cached term's idf is computed from its decoded posting count
+    (:func:`_fetch_raw`). That relies on df ≡ Σ ``n`` over the term's
+    blocks, which ``term_stats`` maintains on the build and the CDC
+    path, and keeps the searcher rank-identical to ``search`` /
+    ``search_many``, which read df from the terms table (tested).
+    Terms with no postings are remembered outside the LRU, so a known
+    miss never scans again. Cache capacity bounds postings memory.
 
     The searcher ranks by BM25 score alone, so an index whose settings
     order hits by anything else (``words_ranking``, or a
@@ -3383,10 +3321,7 @@ class DriverSearcher:
     """
 
     def __init__(
-        self,
-        index: InvertedIndex,
-        cache_capacity: int = 4096,
-        max_prefetch_terms: int = PREFETCH_MAX_TERMS,
+        self, index: InvertedIndex, cache_capacity: int = 4096
     ) -> None:
         from collections import OrderedDict
 
@@ -3398,52 +3333,30 @@ class DriverSearcher:
                 "search_many"
             )
         self.index = index
-        self._df_memo: "dict[str, int | None]" = {}
-        if (
-            getattr(index, "_df_map", None) is not None
-            or index.terms.count() <= max_prefetch_terms
-        ):
-            self._df_map = getattr(index, "_df_map", None) or {
-                r["term"]: int(r["df"])
-                for r in index.terms.select("term", "df").collect()
-            }
-        else:
-            self._df_map = None  # vocabulary too large: lookup path
-        self._cache: "OrderedDict[str, dict]" = OrderedDict()
+        self._cache: "OrderedDict[str, TermPostings]" = OrderedDict()
         self._capacity = cache_capacity
+        self._absent: "set[str]" = set()
 
-    def _dfs(self, terms: "list[str]") -> "dict[str, int]":
-        """df for each known term — dict hit when prefetched, else a
-        memoized ``isin``-pushed terms-table lookup (misses memoized
-        too, so absent terms never re-scan)."""
-        if self._df_map is not None:
-            return {t: self._df_map[t] for t in terms if t in self._df_map}
-        missing = [t for t in terms if t not in self._df_memo]
-        if missing:
-            rows = (
-                self.index.terms.filter(terms_in("term", missing))
-                .select("term", "df")
-                .collect()
-            )
-            found = {r["term"]: int(r["df"]) for r in rows}
-            for t in missing:
-                self._df_memo[t] = found.get(t)
-        return {t: v for t in terms if (v := self._df_memo.get(t)) is not None}
-
-    def _get_raw(self, terms: "list[str]") -> "dict[str, dict]":
-        missing = [t for t in terms if t not in self._cache]
+    def _postings(self, terms: "list[str]") -> "list[TermPostings]":
+        """The terms' cached postings in ``terms`` order, fetching the
+        uncached ones in one Spark job; absent terms are skipped."""
+        missing = [
+            t for t in terms if t not in self._cache and t not in self._absent
+        ]
         if missing:
             fetched = _fetch_raw(self.index, missing)
             for t in missing:
-                if t in fetched:
-                    self._cache[t] = fetched[t]
-                    if len(self._cache) > self._capacity:
-                        self._cache.popitem(last=False)
-        out = {}
+                if t not in fetched:
+                    self._absent.add(t)
+                    continue
+                self._cache[t] = fetched[t]
+                if len(self._cache) > self._capacity:
+                    self._cache.popitem(last=False)
+        out = []
         for t in terms:
             if t in self._cache:
                 self._cache.move_to_end(t)
-                out[t] = self._cache[t]
+                out.append(self._cache[t])
         return out
 
     #: above this dense-array extent the dense scorer's 8B/slot array
@@ -3556,12 +3469,12 @@ class DriverSearcher:
         """Prefetch every query's term postings in ONE Spark scan — the
         serving-replica startup path. Cold serving pays one pruned
         postings scan per query's first touch (N queries = N jobs);
-        ``warm(queries)`` resolves the batch's distinct terms' dfs and
-        raw blocks together (one ``isin``-pruned scan each), after
-        which every listed query serves at zero Spark jobs. LRU
-        capacity still bounds memory — warming more distinct terms
-        than ``cache_capacity`` keeps only the most recent. Returns
-        the number of terms newly fetched into the cache."""
+        ``warm(queries)`` fetches the batch's distinct terms' postings
+        together (one ``isin``-pruned scan), after which every listed
+        query serves at zero Spark jobs. LRU capacity still bounds
+        memory — warming more distinct terms than ``cache_capacity``
+        keeps only the most recent. Returns the number of terms newly
+        fetched into the cache."""
         terms = sorted(
             {
                 t
@@ -3569,9 +3482,8 @@ class DriverSearcher:
                 for t in parse_query(q, self.index.cfg.analyzer)
             }
         )
-        known = self._dfs(terms)
-        missing = [t for t in known if t not in self._cache]
-        self._get_raw(sorted(known))
+        missing = [t for t in terms if t not in self._cache]
+        self._postings(terms)
         return sum(1 for t in missing if t in self._cache)
 
     def _term_postings(
@@ -3579,15 +3491,11 @@ class DriverSearcher:
         query: str,
         filter_docs: "DataFrame | np.ndarray | None" = None,
     ) -> "list[TermPostings]":
-        """Shared prep for the serving scorers: parse -> df lookup ->
-        cached raw-block decode -> optional allowed-id restriction."""
-        dfs = self._dfs(parse_query(query, self.index.cfg.analyzer))
-        raws = self._get_raw(list(dfs))
-        n = self.index.n_docs
-        tps = [
-            _to_term_postings(t, raw, float(idf_fn(n, dfs[t])), self.index)
-            for t, raw in raws.items()
-        ]
+        """Shared prep for the serving scorers: parse -> cached postings
+        (distinct terms, query order) -> optional allowed-id
+        restriction."""
+        terms = parse_query(query, self.index.cfg.analyzer)
+        tps = self._postings(list(dict.fromkeys(terms)))
         if filter_docs is not None:
             allowed = (
                 filter_docs
@@ -3613,7 +3521,7 @@ class DriverSearcher:
         optional allowed-id restriction), capped at maxTotalHits like
         the endpoint's counter — identical to the distributed path's
         count of the bounded candidate set. Postings decode is
-        memoized (_get_raw), so the count and the scoring pass share
+        cached (_postings), so the count and the scoring pass share
         the same cached blocks; ``hitsPerPage=0`` returns ([], total,
         0), the count-only query the DataFrame path cannot express
         (recorded deviation there)."""

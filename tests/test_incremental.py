@@ -5,12 +5,14 @@
 - staged resume reproduces a byte-identical index (north_star)
 """
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from meilibridge_spark.config import IndexConfig
-from meilibridge_spark.operators.search import search
+from meilibridge_spark.functions.bm25 import score_round
+from meilibridge_spark.operators.search import DriverSearcher, search
 from meilibridge_spark.plans.build import build_and_save, build_index
 from meilibridge_spark.plans.incremental import apply_cdc
 from meilibridge_spark.sources.cdc import generate_cdc_batch
@@ -111,10 +113,22 @@ def test_rank_identity_after_cdc(spark, incremental):
     _, _, _, new = incremental
     rows = new.docs.select("doc_id", "text").collect()
     oracle = BM25Oracle([(r["doc_id"], r["text"]) for r in rows], CFG.analyzer)
+    # a fresh DriverSearcher takes idf from the decoded posting count,
+    # so this also pins df == posting count after a delta
+    driver = DriverSearcher(new)
     for q in ["baba cedi", "spark merge", "inserted query filter", "replaced join"]:
         want = oracle.topk(q, 10)
         got = [(r["doc_id"], r["score"]) for r in search(new, q, 10).collect()]
         assert [d for d, _ in got] == [d for d, _ in want], q
+        got = driver.search(q, 10)
+        assert [d for d, _ in got] == [d for d, _ in want], q
+        np.testing.assert_allclose(
+            score_round([s for _, s in got]),
+            score_round([s for _, s in want]),
+            rtol=0,
+            atol=1e-9,
+            err_msg=q,
+        )
 
 
 def test_staged_resume_byte_identical(spark, tmp_index_dir):

@@ -8,7 +8,11 @@ from pyspark.sql import functions as F
 
 from meilibridge_spark.config import AnalyzerConfig, IndexConfig
 from meilibridge_spark.functions.bm25 import score_round
-from meilibridge_spark.operators.search import search, search_many, search_wand
+from meilibridge_spark.operators.search import (
+    DriverSearcher,
+    search,
+    search_many,
+)
 from meilibridge_spark.plans.build import build_index
 from meilibridge_spark.sources.transcripts import (
     generate_transcripts,
@@ -128,9 +132,10 @@ def test_rank_identity_dataframe_path(built, oracle, k):
 
 
 def test_rank_identity_wand_path(built, oracle):
+    s = DriverSearcher(built)
     for q in QUERIES:
         want = oracle.topk(q, 10)
-        got = search_wand(built, q, 10)
+        got = s.search(q, 10, strategy="wand")
         assert [d for d, _ in got] == [d for d, _ in want], f"query={q!r}"
         np.testing.assert_allclose(
             score_round([s for _, s in got]),
@@ -176,19 +181,39 @@ def test_driver_searcher_warm_batch_prefetch(built, oracle, monkeypatch):
 
 
 def test_driver_searcher_large_vocab_guard(built, oracle):
-    """Above max_prefetch_terms the searcher must NOT collect the whole
-    vocabulary (driver-OOM hazard at 10^9 terms); it falls back to the
-    memoized per-term df lookup and stays rank-identical."""
-    from meilibridge_spark.operators.search import DriverSearcher
+    """The searcher never collects the vocabulary (driver-OOM hazard at
+    10^9 terms): construction runs no Spark job, idf comes from the
+    fetched postings and stays rank-identical, a cold query runs one
+    job and a warm one none, and an absent term is remembered so it
+    never rescans."""
+    import itertools
 
-    s = DriverSearcher(built, max_prefetch_terms=0)  # force lookup mode
-    assert s._df_map is None  # no full-vocabulary collect happened
+    sc = built.postings.sparkSession.sparkContext
+    seq = itertools.count()
+
+    def count_jobs(fn):
+        group = f"test-large-vocab-guard-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    s, jobs = count_jobs(lambda: DriverSearcher(built))
+    assert jobs == 0
     for q in QUERIES:
         want = oracle.topk(q, 10)
         got = s.search(q, 10)
         assert [d for d, _ in got] == [d for d, _ in want], f"query={q!r}"
-    # misses are memoized: absent terms never re-scan
-    assert s._df_memo.get("zzznotaterm", "absent") is None
+    assert "zzznotaterm" in s._absent
+    assert count_jobs(lambda: s.search("zzznotaterm", 10)) == ([], 0)
+    cold = DriverSearcher(built)
+    hits, jobs = count_jobs(lambda: cold.search("baba cedi", 10))
+    assert hits and jobs == 1
+    assert count_jobs(lambda: cold.search("baba cedi", 10)) == (hits, 0)
 
 
 def test_driver_searcher_filter_matches_distributed(built):
@@ -290,38 +315,6 @@ def test_driver_searcher_cutoff_from_config(spark, tmp_index_dir):
 
     reloaded = load_snapshot(spark, tmp_index_dir, IndexConfig("cut"))
     assert reloaded.cfg.search_cutoff_ms == 60_000
-
-
-def test_search_wand_cutoff(built, monkeypatch):
-    """One-shot driver path (the query CLI's plain-wand route): no
-    cutoff anywhere delegates to search_wand; a generous budget is
-    rank-identical with degraded False; an expired clock degrades to
-    the empty prefix (the fetch consumed the budget)."""
-    import time as _time
-
-    from meilibridge_spark.operators.search import (
-        search_wand,
-        search_wand_cutoff,
-    )
-
-    for q in QUERIES:
-        want = search_wand(built, q, 10)
-        assert search_wand_cutoff(built, q, 10) == (want, False)
-        hits, degraded = search_wand_cutoff(built, q, 10, cutoff_ms=60_000)
-        assert degraded is False
-        assert [d for d, _ in hits] == [d for d, _ in want]
-
-    base = _time.monotonic
-    t0 = base()
-    calls = {"n": 0}
-
-    def fake_monotonic():
-        calls["n"] += 1
-        return t0 if calls["n"] <= 1 else t0 + 10.0
-
-    monkeypatch.setattr(_time, "monotonic", fake_monotonic)
-    hits, degraded = search_wand_cutoff(built, "baba cedi", 10, cutoff_ms=5)
-    assert degraded is True and hits == []
 
 
 def test_driver_searcher_filter_bounds(built):
@@ -554,7 +547,7 @@ def test_empty_corpus(spark):
     assert idx.n_docs == 0 and idx.avgdl == 0.0
     assert idx.postings.count() == 0 and idx.terms.count() == 0
     assert search(idx, "baba cedi", 5).count() == 0
-    assert search_wand(idx, "baba", 5) == []
+    assert DriverSearcher(idx).search("baba", 5, strategy="wand") == []
     assert search_many(idx, [("q0", "baba")], k=5).count() == 0
 
 

@@ -128,6 +128,20 @@ def test_offset_window(idxs):
     assert [r for r, _, _, _ in sorted(by[0])] == [2, 3]  # absolute ranks
 
 
+def test_offset_mode_multi_search_windows_are_local(idxs):
+    """The per-request window table is a driver-built local relation,
+    not a parallelized RDD, so collecting an offset-mode multi_search
+    runs no Python task to read rows the driver already holds."""
+    df = multi_search(idxs, [
+        {"index_uid": "a", "q": "spark join", "k": 2, "offset": 1},
+        {"index_uid": "a", "q": "join", "k": 3},
+    ])
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan, plan
+    assert "LocalRelation" in plan, plan
+    assert df.collect()
+
+
 def test_validation(idxs):
     with pytest.raises(ValueError, match="unknown key"):
         multi_search(idxs, [{"index_uid": "a", "q": "x", "facets": ["y"]}])

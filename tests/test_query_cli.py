@@ -284,6 +284,36 @@ def test_batch_file_count_only(saved, monkeypatch, capsys, tmp_path):
     assert out[0]["totalPages"] == 0
 
 
+def test_default_mode_honours_ranking_settings(
+    saved, spark, monkeypatch, capsys, tmp_path
+):
+    """The driver scorer ranks by BM25 alone, so on an index whose
+    ranking settings order by more than score the default single-query
+    route returns search()'s order, and --mode wand exits."""
+    import shutil
+
+    from meilibridge_spark.operators.ranking import DEFAULT_RANKING_RULES
+    from meilibridge_spark.sources.tables import (
+        load_snapshot,
+        update_settings,
+    )
+
+    d = str(tmp_path / "ranked")
+    shutil.copytree(saved.index_dir, d)
+    update_settings(d, {"rankingRules": list(DEFAULT_RANKING_RULES)})
+    idx = load_snapshot(spark, d, IndexConfig(index_name="qcli"))
+    want = [r["doc_id"] for r in search(idx, QUERY, 10).collect()]
+    resp = _run_cli(
+        monkeypatch, capsys, "--index-dir", d, "--query", QUERY, "-k", "10"
+    )
+    assert [h["doc_id"] for h in resp["hits"]] == want
+    with pytest.raises(SystemExit):
+        _run_cli(
+            monkeypatch, capsys,
+            "--index-dir", d, "--query", QUERY, "--mode", "wand",
+        )
+
+
 # ------------------------------------------------- multi-search CLI
 
 
