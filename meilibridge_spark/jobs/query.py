@@ -7,20 +7,26 @@ Usage:
       [--mode df|wand] [--filter-role user] [--offset N] \
       [--page N --hits-per-page M] [--search-on attr1,attr2] \
       (--hits-per-page 0 = Meilisearch's count-only request: empty
-       hits + exhaustive totalHits/totalPages=0 via the dedicated
-       count plan; composes with --filter/--typo/--prefix/--facets
-       (facet-only queries) and with --matching-strategy all) \
+       hits + exhaustive totalHits, totalPages=0) \
       [--facets attr1,attr2] \
       [--sort attr:asc,attr2:desc] [--distinct] [--proximity] \
       [--tenant-token JWT --keys-file keys.json --master-key K]
 
-Single-query routing: a plain query (no filter/offset/facets/phrases/
-sort/distinct/proximity/pagination) on an index whose ranking settings
-order hits by BM25 score alone is answered on the driver by
-DriverSearcher (--mode wand, the default there; one Spark job fetches
-the query's postings). Any other ranking order takes the DataFrame
-search (--mode df), which honours it; --mode wand then exits with an
-error naming the ranking settings.
+Single-query routing: a single --query is a batch of one. It takes
+the same search_many call and response code as --queries-file, with
+two exceptions:
+- a plain query (no filter/offset/facets/phrases/negatives/sort/
+  distinct/proximity/typo/prefix/pagination, default matching
+  strategy) on an index whose ranking settings order hits by BM25
+  score alone is answered on the driver by DriverSearcher (--mode
+  wand, the default there; one Spark job fetches the query's
+  postings). Any other ranking order takes search_many (--mode df),
+  which honours it; --mode wand then exits with an error naming the
+  ranking settings;
+- a query with positive quoted phrases takes
+  positions.search_with_phrases.
+--sort/--distinct/--distinct-attr/--facets post-process the route's
+top max_total_hits hits; --offset and --page slice that frame.
 
 Batch mode (one scatter-gather Spark job for the whole file, postings
 served from the doc-shard cached layout):
@@ -106,11 +112,12 @@ def main() -> None:
                          "max_total_hits matching docs (single query only)")
     ap.add_argument("--mode", choices=["df", "wand"], default=None,
                     help="single-query path: wand = the driver-side "
-                         "scorer (DriverSearcher), df = the DataFrame "
-                         "search. Default: wand when the index's ranking "
-                         "settings order hits by score alone, else df; "
-                         "wand on any other order is an error. Invalid "
-                         "in batch mode")
+                         "scorer (DriverSearcher), df = the batch "
+                         "search (search_many, a batch of one). Default: "
+                         "wand for a plain query when the index's "
+                         "ranking settings order hits by score alone, "
+                         "else df; wand on any other order is an error. "
+                         "Invalid in batch mode")
     ap.add_argument("--cutoff-ms", type=int, default=None,
                     help="searchCutoffMs override for this query "
                          "(default: the index's search_cutoff_ms "
@@ -195,6 +202,10 @@ def main() -> None:
         ap.error("--offset does not compose with --page/--hits-per-page "
                  "(the endpoint ignores offset in exhaustive mode); "
                  "drop one")
+    if (args.page is not None and args.page < 1) or (
+        args.hits_per_page is not None and args.hits_per_page < 0
+    ):
+        ap.error("--page must be >= 1 and --hits-per-page >= 0")
     if args.facets and (args.queries_file or args.embeddings):
         ap.error("--facets applies to single keyword queries only")
     if (args.sort or args.distinct or args.distinct_attr) and (
@@ -209,7 +220,6 @@ def main() -> None:
     from meilibridge_spark.operators.search import (
         DriverSearcher,
         prepare_serving,
-        search,
         search_many,
     )
     from meilibridge_spark.session import build_session
@@ -350,208 +360,9 @@ def main() -> None:
         print(json.dumps({"query": args.query, "k": args.k, "hits": out}))
         return
 
-    if args.queries_file:
-        with open(args.queries_file) as f:
-            batch = [
-                (f"q{i:05d}", line.strip())
-                for i, line in enumerate(f)
-                if line.strip()
-            ]
-        # '-word' negatives and '-"..."' negative phrases are both
-        # handled natively by search_many; phrases additionally need
-        # the positions table — fail the whole batch up front instead
-        # of raising mid-job. The check uses the quote-aware parser
-        # itself, so a dash inside a positive quoted phrase never
-        # false-positives.
-        from meilibridge_spark.operators.positions import parse_negative
-
-        bad = next(
-            (t for _, t in batch if parse_negative(t)[2]), None
-        )
-        if bad is not None and index.positions is None:
-            ap.error(
-                f'negative phrases (-"...") need a positions table '
-                f"(offending query: {bad!r}); rebuild the snapshot "
-                "with --with-positions"
-            )
-        filt = make_filter()
-        if filt is None:
-            prepare_serving(index)  # shuffle-free only helps unfiltered
-        if args.page is not None or args.hits_per_page is not None:
-            # batch exhaustive pagination: every query's page slice +
-            # exhaustive totals in two jobs (search_many(page=));
-            # carrier rows keep totals for empty pages so every query
-            # gets a full response, like the endpoint
-            rows = search_many(
-                index, batch, filter_docs=filt, typo=args.typo,
-                matching_strategy=args.matching_strategy,
-                attributes_to_search_on=search_on,
-                prefix=args.prefix, proximity_rank=args.proximity,
-                page=args.page, hits_per_page=args.hits_per_page,
-                carrier_empty_pages=True,
-            ).collect()
-            by_q: "dict[str, list]" = {qid: [] for qid, _ in batch}
-            meta: "dict[str, tuple]" = {}
-            for r in rows:
-                meta[r["query_id"]] = (
-                    r["total_hits"], r["total_pages"],
-                    r["page"], r["hits_per_page"],
-                )
-                if r["doc_id"] is not None:
-                    by_q[r["query_id"]].append(r)
-            for qid, text in batch:
-                th, tp, pg, hpp = meta[qid]
-                hits_out = [
-                    {
-                        "doc_id": r["doc_id"],
-                        "score": round(r["score"], 6),
-                        **(
-                            {"prox_cost": r["prox_cost"]}
-                            if args.proximity
-                            else {}
-                        ),
-                    }
-                    for r in sorted(by_q[qid], key=lambda r: r["rank"])
-                ]
-                print(json.dumps({
-                    "query_id": qid, "query": text, "page": pg,
-                    "hitsPerPage": hpp, "totalHits": th,
-                    "totalPages": tp, "hits": hits_out,
-                }))
-            return
-        rows = search_many(
-            index, batch, k=args.k, filter_docs=filt, typo=args.typo,
-            matching_strategy=args.matching_strategy,
-            attributes_to_search_on=search_on, offset=args.offset,
-            prefix=args.prefix, proximity_rank=args.proximity,
-        ).collect()
-        hits: "dict[str, list]" = {qid: [] for qid, _ in batch}
-        for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
-            hits[r["query_id"]].append(
-                {
-                    "doc_id": r["doc_id"],
-                    "score": round(r["score"], 6),
-                    **(
-                        {"prox_cost": r["prox_cost"]}
-                        if args.proximity
-                        else {}
-                    ),
-                }
-            )
-        for qid, text in batch:
-            print(json.dumps({"query_id": qid, "query": text, "hits": hits[qid]}))
-        return
-
-    query_text = args.query
-    count_only = args.hits_per_page == 0
-    if args.matching_strategy in ("all", "frequency"):
-        if args.page is not None or args.hits_per_page is not None:
-            # exhaustive pagination composes with both strategies via
-            # the batch paged path (search_many(page=) — the top-k
-            # scatter-gather sliced to the page plus the shard-count
-            # pass); --typo/--prefix/--search-on all ride natively,
-            # hitsPerPage=0 is the count-only response shape
-            if args.facets:
-                ap.error(
-                    "--facets does not compose with --matching-strategy "
-                    "all|frequency under --page/--hits-per-page"
-                )
-            if '"' in query_text:
-                ap.error(
-                    "quoted/negative phrases do not compose with "
-                    "--matching-strategy all|frequency (phrases need "
-                    "the positional single-query path)"
-                )
-            rows = search_many(
-                index, [("q", args.query)], filter_docs=make_filter(),
-                typo=args.typo,
-                matching_strategy=args.matching_strategy,
-                attributes_to_search_on=search_on, prefix=args.prefix,
-                page=args.page, hits_per_page=args.hits_per_page,
-                carrier_empty_pages=True,
-            ).collect()
-            meta = rows[0]  # the carrier guarantees >= 1 row
-            out = [
-                {"doc_id": r["doc_id"], "score": round(r["score"], 6)}
-                for r in sorted(
-                    (r for r in rows if r["doc_id"] is not None),
-                    key=lambda r: r["rank"],
-                )
-            ]
-            print(json.dumps({
-                "query": args.query, "hits": out,
-                "page": meta["page"],
-                "hitsPerPage": meta["hits_per_page"],
-                "totalHits": meta["total_hits"],
-                "totalPages": meta["total_pages"],
-            }))
-            return
-        # the batch path owns the word-group machinery (synonyms + typo
-        # alternates satisfying their word); singles ride it. '-word'
-        # negatives are native to search_many; quoted (and negative)
-        # phrases need the positional path, which only composes with
-        # the default strategy — error instead of silently dropping
-        # the adjacency constraint (or inverting the negation).
-        if '"' in query_text:
-            ap.error(
-                "quoted/negative phrases do not compose with "
-                "--matching-strategy all|frequency (phrases need the "
-                "positional single-query path); use the default strategy"
-            )
-        rows = search_many(
-            index, [("q", args.query)], k=args.k, filter_docs=make_filter(),
-            typo=args.typo, matching_strategy=args.matching_strategy,
-            attributes_to_search_on=search_on, offset=args.offset,
-            prefix=args.prefix,
-        ).collect()
-        out = [
-            {"doc_id": r["doc_id"], "score": round(r["score"], 6)}
-            for r in sorted(rows, key=lambda r: r["rank"])
-        ]
-        print(json.dumps({"query": args.query, "k": args.k, "hits": out}))
-        return
-    has_phrase = '"' in query_text
-    has_negative = re.search(r"(?:^|\s)-\S", query_text) is not None
-    if has_phrase and index.positions is None:
-        ap.error('quoted phrases need a snapshot built with positions '
-                 '(build_index --with-positions)')
-    if has_phrase and args.typo:
-        ap.error("--typo does not compose with quoted phrases")
-    if has_negative and args.typo:
-        ap.error("--typo does not compose with negative keywords")
-    if args.typo:
-        from meilibridge_spark.functions.tokenizer import parse_query
-        from meilibridge_spark.operators.search import typo_expand_terms
-
-        query_text = " ".join(
-            typo_expand_terms(index, parse_query(args.query, cfg.analyzer))
-        )
-    if args.prefix:
-        if has_phrase or has_negative:
-            ap.error("--prefix does not compose with quoted phrases or "
-                     "negative keywords in single-query mode")
-        if args.typo:
-            ap.error("--prefix + --typo compose only on the batch paths "
-                     "(--queries-file or --matching-strategy all|frequency)")
-        from meilibridge_spark.functions.tokenizer import parse_query
-        from meilibridge_spark.operators.search import prefix_expand_terms
-
-        query_text = " ".join(
-            prefix_expand_terms(index, parse_query(query_text, cfg.analyzer))
-        )
-    # Meilisearch placeholder semantics: a query with no indexable
-    # tokens (empty / stop-word-only --query) matches ALL documents —
-    # routed through search_with_phrases -> placeholder_search on the
-    # DataFrame path (the term-scoring wand/serving modes don't apply)
-    from meilibridge_spark.functions.tokenizer import parse_query as _pq
-
-    empty_q = not has_phrase and not has_negative and not _pq(
-        query_text, cfg.analyzer
-    )
-    sort_spec = None
+    sort_spec: "list[tuple[str, bool]]" = []
     geo_sort = None  # (lat, lng, ascending) from _geoPoint(lat, lng)
     if args.sort:
-        sort_spec = []
         # split on commas OUTSIDE parens: '_geoPoint(48.2, 2.3):asc'
         # carries commas of its own
         parts, depth, cur = [], 0, []
@@ -618,232 +429,254 @@ def main() -> None:
     distinct_attr = args.distinct_attr or (
         index.cfg.distinct_attribute if args.distinct else None
     )
+
+    # a single --query is a batch of one: both modes share the
+    # search_many call and the response code below
+    if args.queries_file:
+        with open(args.queries_file) as f:
+            batch = [
+                (f"q{i:05d}", line.strip())
+                for i, line in enumerate(f)
+                if line.strip()
+            ]
+    else:
+        batch = [("q", args.query)]
+    # '-word' negatives and '-"..."' negative phrases are both
+    # handled natively by search_many; phrases additionally need
+    # the positions table — fail up front instead of raising
+    # mid-job. The check uses the quote-aware parser itself, so a
+    # dash inside a positive quoted phrase never false-positives.
+    from meilibridge_spark.operators.positions import (
+        parse_negative,
+        parse_quoted,
+        search_with_phrases,
+    )
+
+    bad = next((t for _, t in batch if parse_negative(t)[2]), None)
+    if bad is not None and index.positions is None:
+        ap.error(
+            f'negative phrases (-"...") need a positions table '
+            f"(offending query: {bad!r}); rebuild the snapshot "
+            "with --with-positions"
+        )
+    filt = make_filter()
     paged = args.page is not None or args.hits_per_page is not None
+
+    def many(k: int, offset: int, paged: bool):
+        kw = dict(
+            filter_docs=filt, typo=args.typo,
+            matching_strategy=args.matching_strategy,
+            attributes_to_search_on=search_on, prefix=args.prefix,
+            proximity_rank=args.proximity,
+        )
+        if paged:
+            # exhaustive pagination: every query's page slice +
+            # exhaustive totals in two jobs; carrier rows keep totals
+            # for empty pages so every query gets a full response,
+            # like the endpoint
+            return search_many(
+                index, batch, page=args.page,
+                hits_per_page=args.hits_per_page,
+                carrier_empty_pages=True, **kw,
+            )
+        return search_many(index, batch, k=k, offset=offset, **kw)
+
+    def hit(r) -> dict:
+        return {
+            "doc_id": r["doc_id"],
+            "score": round(r["score"], 6),
+            **{a: (str(r[a]) if r[a] is not None else None)
+               for a, _ in sort_spec},
+            **({"prox_cost": r["prox_cost"]} if args.proximity else {}),
+            **({"_geoDistance": r["_geoDistance"]} if geo_sort else {}),
+        }
+
+    def respond(rows, paged: bool) -> "dict[str, dict]":
+        """search_many rows -> one response body per query_id."""
+        out = {qid: {"hits": []} for qid, _ in batch}
+        for r in sorted(rows, key=lambda r: r["rank"] or 0):
+            resp = out[r["query_id"]]
+            if paged:
+                resp.update(
+                    page=r["page"], hitsPerPage=r["hits_per_page"],
+                    totalHits=r["total_hits"], totalPages=r["total_pages"],
+                )
+            if r["doc_id"] is not None:
+                resp["hits"].append(hit(r))
+        return out
+
+    if args.queries_file:
+        if filt is None:
+            prepare_serving(index)  # shuffle-free only helps unfiltered
+        out = respond(many(args.k, args.offset, paged).collect(), paged)
+        for qid, text in batch:
+            print(json.dumps({"query_id": qid, "query": text, **out[qid]}))
+        return
+
+    pos_text, neg_words, neg_phrases = parse_negative(args.query)
+    has_phrase = bool(parse_quoted(pos_text)[1])
+    has_negative = bool(neg_words or neg_phrases)
+    if has_phrase:
+        # positive quoted phrases take the positional route
+        # (search_with_phrases), which has no typo/prefix expansion
+        if index.positions is None:
+            ap.error('quoted phrases need a snapshot built with positions '
+                     '(build_index --with-positions)')
+        if args.typo:
+            ap.error("--typo does not compose with quoted phrases")
+        if args.prefix:
+            ap.error("--prefix does not compose with quoted phrases")
+    if args.matching_strategy != "last" and '"' in args.query:
+        ap.error(
+            "quoted/negative phrases do not compose with "
+            "--matching-strategy all|frequency (phrases need the "
+            "positional single-query path); use the default strategy"
+        )
+    if paged and args.facets and args.matching_strategy != "last":
+        ap.error(
+            "--facets does not compose with --matching-strategy "
+            "all|frequency under --page/--hits-per-page"
+        )
+    if args.hits_per_page == 0 and search_on is not None:
+        ap.error(
+            "--hits-per-page 0 (count-only) composes with "
+            "--filter/--typo/--prefix/--facets only, not "
+            "--search-on; use a positive hitsPerPage"
+        )
     if paged and (
         args.offset or args.mode == "wand" or sort_spec or geo_sort
         or distinct_attr is not None or has_phrase or has_negative
         or args.proximity or args.cutoff_ms is not None
     ):
-        # narrow and loud, like --cutoff-ms: exhaustive pagination
-        # rides the plain DataFrame search (filters/--search-on
-        # compose); other options keep their offset/limit semantics
-        ap.error("--page/--hits-per-page compose with filters and "
-                 "--search-on only (DataFrame path; no --offset/"
-                 "--sort/--distinct/phrases/negatives/--proximity/"
-                 "--mode wand/--cutoff-ms)")
+        ap.error("--page/--hits-per-page compose with filters, "
+                 "--search-on, --typo, --prefix, --facets and "
+                 "--matching-strategy only (no --offset/--sort/"
+                 "--distinct/phrases/negatives/--proximity/--mode wand/"
+                 "--cutoff-ms)")
     # the driver scorer ranks by BM25 score alone: it is the default
-    # only when the index's ranking settings order hits by score; any
-    # other order is the DataFrame search's, which honours them
-    score_only = resolve_ranking(index.cfg, index).score_only
+    # only when the index's ranking settings order hits by score under
+    # the exactness data search_many uses (the typed query); any other
+    # order is search_many's, which honours it
+    score_only = resolve_ranking(index.cfg, index, exact_data=True).score_only
     if args.mode == "wand" and not score_only:
         ap.error("--mode wand ranks by BM25 score alone, but this index "
                  "orders hits by its ranking settings (words_ranking / "
                  "ranking_rules); use the default mode or --mode df")
-    plain_wand = (
-        args.mode != "df" and score_only
-        and not args.filter_role and not args.filter_expr
-        and search_on is None and not args.offset and not args.facets
-        and not has_phrase and not has_negative and not sort_spec
-        and not geo_sort and distinct_attr is None and not args.proximity
-        and not paged and not empty_q
+    from meilibridge_spark.functions.tokenizer import parse_query
+
+    plain = (
+        args.mode != "df" and score_only and filt is None
+        and search_on is None and args.matching_strategy == "last"
+        and not (
+            args.offset or args.facets or args.typo or args.prefix
+            or has_phrase or has_negative or sort_spec or geo_sort
+            or distinct_attr or args.proximity or paged
+        )
+        # an empty / stop-word-only query is Meilisearch's placeholder
+        # search (all documents), which search_many answers
+        and bool(parse_query(args.query, index.cfg.analyzer))
     )
-    degraded = None
-    if args.cutoff_ms is not None and not plain_wand:
-        # loud beats a silently un-budgeted query: the distributed /
-        # DataFrame routes have no per-query interrupt point
-        # (COVERAGE.md Q15), so an explicit budget there is an error
+    if args.cutoff_ms is not None and not plain:
+        # loud beats a silently un-budgeted query: the distributed
+        # routes have no per-query interrupt point (COVERAGE.md Q15),
+        # so an explicit budget there is an error
         ap.error("--cutoff-ms applies to the plain --mode wand path "
                  "only (score-only ranking settings; no filters/offset/"
-                 "facets/phrases/sort/distinct/proximity)")
-    if plain_wand:
+                 "facets/phrases/negatives/sort/distinct/proximity/"
+                 "typo/prefix/matching strategy)")
+    resp = {"query": args.query, "k": args.k}
+    if plain:
         # search_cutoff falls back to the unbudgeted scorer when neither
         # --cutoff-ms nor the index's search_cutoff_ms is set
         hits, degraded = DriverSearcher(index).search_cutoff(
-            query_text, args.k, cutoff_ms=args.cutoff_ms
+            args.query, args.k, cutoff_ms=args.cutoff_ms
         )
-        if args.cutoff_ms is None and index.cfg.search_cutoff_ms is None:
-            degraded = None  # unbudgeted: no degraded marker
-        out = [{"doc_id": d, "score": round(s, 6)} for d, s in hits]
+        resp["hits"] = [hit({"doc_id": d, "score": s}) for d, s in hits]
+        if (
+            args.cutoff_ms is not None
+            or index.cfg.search_cutoff_ms is not None
+        ):
+            resp["degraded"] = degraded
+        print(json.dumps(resp))
+        return
+    wide = bool(sort_spec or geo_sort or distinct_attr or args.facets)
+    if not (has_phrase or wide):
+        # exactly the --queries-file call and response, batch size one
+        resp.update(respond(many(args.k, args.offset, paged).collect(),
+                            paged)["q"])
+        print(json.dumps(resp))
+        return
+    # sort/distinct/facets post-process the top max_total_hits hit set
+    # (Meilisearch applies distinct before pagination), so the route
+    # ranks a cap-bounded frame and offset/page slice it driver-side
+    cap = index.cfg.max_total_hits if wide else args.offset + args.k
+    if has_phrase:
+        frame = search_with_phrases(
+            index, args.query, cap, filter_docs=filt,
+            attributes_to_search_on=search_on,
+            proximity_rank=args.proximity,
+        )
     else:
-        # --search-on routes to the DataFrame path (WAND's block-max
-        # bounds don't model the attribute restriction); quoted phrases
-        # route through the positional-constraint composition
-        post = bool(sort_spec or geo_sort or distinct_attr)
-        # distinct/sort post-process the top max_total_hits hit set
-        # (Meilisearch applies distinct before pagination), so with them
-        # the search itself runs uncapped-to-max and offset is applied
-        # to the post-processed ordering driver-side (k rows are tiny)
-        cap = index.cfg.max_total_hits if post else args.k
-        off = 0 if post else args.offset
-        if paged and count_only:
-            # Meilisearch's count-only request (hitsPerPage=0): hits
-            # stay empty and totalHits is exhaustive — answered by the
-            # dedicated count plan (search_count; the paged DataFrame
-            # has no hit row to carry response metadata on). --typo /
-            # --prefix expansions are already folded into query_text,
-            # so the count covers the same candidate set the paged
-            # search would rank.
-            if search_on is not None:
-                ap.error(
-                    "--hits-per-page 0 (count-only) composes with "
-                    "--filter/--typo/--prefix/--facets only, not "
-                    "--search-on; use a positive hitsPerPage"
-                )
-            from meilibridge_spark.operators.search import search_count
+        frame = many(cap, 0, False)
+    # the post-passes join docs columns onto the hits: keep only the
+    # hit columns, so a ranking-rule field never collides with them
+    frame = frame.select(
+        "doc_id", "score",
+        *(c for c in ("rank", "prox_cost") if c in frame.columns),
+    )
+    hits_df = frame
+    if distinct_attr:
+        from meilibridge_spark.operators.relational import distinct_hits
 
-            r = search_count(
-                index, query_text, filter_docs=make_filter()
-            ).collect()[0]
-            resp = {
-                "query": args.query, "hits": [],
-                "page": 1 if args.page is None else args.page,
-                "hitsPerPage": 0,
-                "totalHits": r["total_hits"],
-                "totalPages": r["total_pages"],
-            }
-            if args.facets:
-                # facet-only query (the endpoint's common hitsPerPage=0
-                # + facets pattern): same bounded candidate analog as
-                # the hit path's --facets (top max_total_hits set)
-                from meilibridge_spark.operators.relational import (
-                    facet_distribution,
-                )
+        hits_df = distinct_hits(
+            hits_df, index.docs, distinct_attr, hit_bound=cap,
+        )
+    if sort_spec:
+        from meilibridge_spark.operators.relational import sort_hits
 
-                fcap = index.cfg.max_total_hits
-                full = search(
-                    index, query_text, fcap, filter_docs=make_filter()
-                )
-                attrs = [
-                    a.strip() for a in args.facets.split(",") if a.strip()
-                ]
-                fd: "dict[str, dict]" = {a: {} for a in attrs}
-                for frow in facet_distribution(
-                    full, index.docs, attrs, hit_bound=fcap,
-                    max_values=index.cfg.faceting_max_values,
-                    sort_by=index.cfg.facet_sort_map(),
-                ).collect():
-                    fd[frow["facet"]][frow["value"]] = frow["count"]
-                resp["facetDistribution"] = fd
-            print(json.dumps(resp))
-            return
-        if paged:
-            if empty_q:
-                # placeholder + exhaustive pagination (empty-q + page/
-                # hitsPerPage is a common endpoint combination)
-                from meilibridge_spark.operators.positions import (
-                    search_with_phrases,
-                )
+        hits_df = sort_hits(
+            hits_df, index.docs, sort_spec,
+            k=args.offset + args.k, hit_bound=cap,
+        )
+    elif geo_sort:
+        from meilibridge_spark.operators.relational import geo_sort_hits
 
-                hits_df = search_with_phrases(
-                    index, query_text, filter_docs=make_filter(),
-                    page=args.page, hits_per_page=args.hits_per_page,
-                )
-            else:
-                hits_df = search(
-                    index, query_text, filter_docs=make_filter(),
-                    attributes_to_search_on=search_on,
-                    page=args.page, hits_per_page=args.hits_per_page,
-                )
-        elif has_phrase or has_negative or empty_q:
-            from meilibridge_spark.operators.positions import (
-                search_with_phrases,
-            )
-
-            hits_df = search_with_phrases(
-                index, query_text, cap, filter_docs=make_filter(),
-                attributes_to_search_on=search_on, offset=off,
-                proximity_rank=args.proximity,
-            )
-        else:
-            hits_df = search(
-                index, query_text, cap, filter_docs=make_filter(),
-                attributes_to_search_on=search_on, offset=off,
-                proximity_rank=args.proximity,
-            )
+        glat, glng, gasc = geo_sort
+        hits_df = geo_sort_hits(
+            hits_df, index.docs, index.cfg.geo_attributes, glat, glng,
+            ascending=gasc, k=args.offset + args.k, hit_bound=cap,
+        )
+    rows = hits_df.collect()
+    if not (sort_spec or geo_sort):
+        # distinct_hits and search_many's local rows keep no order
         if distinct_attr:
-            from meilibridge_spark.operators.relational import distinct_hits
-
-            hits_df = distinct_hits(
-                hits_df, index.docs, distinct_attr, hit_bound=cap,
-            )
-        if sort_spec:
-            from meilibridge_spark.operators.relational import sort_hits
-
-            hits_df = sort_hits(
-                hits_df, index.docs, sort_spec,
-                k=args.offset + args.k, hit_bound=cap,
-            )
-        elif geo_sort:
-            from meilibridge_spark.operators.relational import geo_sort_hits
-
-            glat, glng, gasc = geo_sort
-            hits_df = geo_sort_hits(
-                hits_df, index.docs, index.cfg.geo_attributes, glat, glng,
-                ascending=gasc, k=args.offset + args.k, hit_bound=cap,
-            )
-        rows = hits_df.collect()
-        if paged:
-            page_meta = {
-                "page": 1 if args.page is None else args.page,
-                "hitsPerPage": (
-                    20 if args.hits_per_page is None else args.hits_per_page
-                ),
-                "totalHits": rows[0]["total_hits"] if rows else 0,
-                "totalPages": rows[0]["total_pages"] if rows else 0,
-            }
-        if post:
-            if not sort_spec and not geo_sort:
-                rows = sorted(
-                    rows, key=lambda r: (-round(r["score"], 9), r["doc_id"])
-                )
-            rows = rows[args.offset : args.offset + args.k]
-        sort_attrs = [a for a, _ in (sort_spec or [])]
-        out = [
-            {
-                "doc_id": r["doc_id"],
-                "score": round(r["score"], 6),
-                **{a: (str(r[a]) if r[a] is not None else None)
-                   for a in sort_attrs},
-                **(
-                    {"prox_cost": r["prox_cost"]} if args.proximity else {}
-                ),
-                **(
-                    {"_geoDistance": r["_geoDistance"]} if geo_sort else {}
-                ),
-            }
-            for r in rows
-        ]
-    resp = {"query": args.query, "k": args.k, "hits": out}
-    if degraded is not None:
-        resp["degraded"] = degraded
+            rows.sort(key=lambda r: (-round(r["score"], 9), r["doc_id"]))
+        elif "rank" in frame.columns:
+            rows.sort(key=lambda r: r["rank"])
     if paged:
-        resp.update(page_meta)
+        # only --facets widens a paged query: the frame holds every
+        # counted hit (totals are capped at max_total_hits)
+        pg = 1 if args.page is None else args.page
+        hpp = 20 if args.hits_per_page is None else args.hits_per_page
+        resp.update(
+            page=pg, hitsPerPage=hpp, totalHits=len(rows),
+            totalPages=-(-len(rows) // hpp) if hpp else 0,
+        )
+        rows = rows[(pg - 1) * hpp : pg * hpp]
+    else:
+        rows = rows[args.offset : args.offset + args.k]
+    resp["hits"] = [hit(r) for r in rows]
     if args.facets:
         # Meilisearch computes facet counts over ALL matching docs; the
         # bounded analog uses the top max_total_hits hit set (the same
         # cap Meilisearch applies to the paginated set)
         from meilibridge_spark.operators.relational import facet_distribution
 
-        cap = index.cfg.max_total_hits
-        if has_phrase or has_negative:
-            from meilibridge_spark.operators.positions import (
-                search_with_phrases as _swp,
-            )
-
-            full = _swp(
-                index, query_text, cap, filter_docs=make_filter(),
-                attributes_to_search_on=search_on,
-            )
-        else:
-            full = search(
-                index, query_text, cap, filter_docs=make_filter(),
-                attributes_to_search_on=search_on,
-            )
         attrs = [a.strip() for a in args.facets.split(",") if a.strip()]
         fd: "dict[str, dict]" = {a: {} for a in attrs}
         # faceting index settings drive the endpoint-shaped defaults
         for r in facet_distribution(
-            full, index.docs, attrs, hit_bound=cap,
+            frame, index.docs, attrs, hit_bound=cap,
             max_values=index.cfg.faceting_max_values,
             sort_by=index.cfg.facet_sort_map(),
         ).collect():

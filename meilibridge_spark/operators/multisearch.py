@@ -172,6 +172,16 @@ def multi_search(
                 f"request {i}: unknown index_uid {uid!r}; "
                 f"have: {sorted(indexes)}"
             )
+        for kk in ("k", "offset", "page", "hits_per_page"):
+            v = req.get(kk)
+            # paging keys count by presence: a null page is absent
+            absent = v is None and kk in ("page", "hits_per_page")
+            if kk not in req or absent:
+                continue
+            if isinstance(v, bool) or not isinstance(v, int):
+                raise ValueError(
+                    f"request {i}: {kk!r} must be an integer, got {v!r}"
+                )
         if req.get("offset", 0) < 0 or req.get("k", default_k) < 1:
             raise ValueError(f"request {i}: k must be >= 1, offset >= 0")
         if "hybrid" in req and "vector" not in req:
@@ -474,5 +484,6 @@ def multi_search(
                 part = part.withColumn(col, F.lit(None).cast(typ))
         out = part if out is None else out.unionByName(part)
 
-    # <= sum(k_i) rows total: the final order is a bounded sort
-    return out.orderBy("request_no", "rank")
+    # <= sum(k_i) rows total: sort them in one partition — a global
+    # orderBy would range-partition them, sampling in extra jobs
+    return out.coalesce(1).sortWithinPartitions("request_no", "rank")

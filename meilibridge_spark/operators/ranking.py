@@ -20,17 +20,26 @@ list given, the flags activate criteria over ``DEFAULT_RANKING_RULES``
 list, a listed built-in rule participates only when its data exists —
 
 - ``words``      — always (matched_terms is always computed);
-- ``typo``       — when the caller supplied ``orig_terms`` (without a
-  typo expansion every match is exact, so the criterion is constant and
-  skipping it is rank-identical);
+- ``typo``       — when the caller supplied ``orig_terms``;
 - ``proximity``  — when the index carries a positions table (byWord) or
   attrs blocks (byAttribute);
 - ``attribute``  — when the index was built ``with_attributes=True``;
 - ``sort``       — when the query carries ``sort`` parameters (exactly
   Meilisearch: the sort rule is a no-op for queries without ``sort``;
   this holds for the flag form too);
-- ``exactness``  — when the caller supplied ``exact_terms`` (same
-  constant-column argument as ``typo``).
+- ``exactness``  — when the caller supplied ``exact_terms``.
+
+A skipped ``typo`` / ``exactness`` rule is NOT a constant column:
+without the data every match counts as exact, so ``matched_exact`` /
+``exact_form`` would equal ``matched_terms`` and the rule would order
+by the ``words`` count. Skipping it is rank-identical only when
+``words`` precedes it in the list. ``search`` has exactness data only
+from an explicit ``exact_terms``, while ``search_many`` always uses
+the typed query, so under ``["exactness"]`` the two paths order
+differently (7 of 21 probe queries on a 60-conversation corpus, all
+multi-word, got different top-10s).
+The query CLI therefore resolves its driver-scorer test with
+``exact_data=True``, the data ``search_many`` uses.
 
 Custom ``field:asc|desc`` rules always participate; the field's values
 are joined from the docs table at ranking time (one doc_id equi-join,

@@ -142,6 +142,56 @@ def test_offset_mode_multi_search_windows_are_local(idxs):
     assert df.collect()
 
 
+def test_offset_mode_collect_runs_no_sort_jobs(idxs):
+    """The closing (request_no, rank) order sorts the few merged rows
+    in one partition. Collecting an offset-mode multi_search then runs
+    two Spark jobs (the window-table broadcast and the one-partition
+    result stage); a global orderBy range-partitions the rows and
+    samples them in extra jobs."""
+    import itertools
+
+    sc = idxs["a"].postings.sparkSession.sparkContext
+    seq = itertools.count()
+
+    def count_jobs(fn):
+        group = f"test-multi-search-jobs-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    reqs = [
+        {"index_uid": "a", "q": "spark join", "k": 2, "offset": 1},
+        {"index_uid": "a", "q": "join", "k": 3},
+    ]
+    df = multi_search(idxs, reqs)  # the scorer job runs in the call
+    rows, jobs = count_jobs(df.collect)
+    assert jobs <= 2, jobs
+    keys = [(r["request_no"], r["rank"]) for r in rows]
+    assert keys == [(0, 2), (0, 3), (1, 1), (1, 2), (1, 3)]
+
+
+def test_validation_rejects_non_int_window_keys(idxs):
+    """An endpoint body's null / string / bool limit or offset (and a
+    non-int page or hitsPerPage) is a request error naming the key,
+    not a TypeError from the range check."""
+    for key, val in (
+        ("offset", None),
+        ("k", "3"),
+        ("k", True),
+        ("page", 1.5),
+        ("hits_per_page", "2"),
+    ):
+        with pytest.raises(
+            ValueError, match=f"request 0: '{key}' must be an integer"
+        ):
+            multi_search(idxs, [{"index_uid": "a", "q": "x", key: val}])
+
+
 def test_validation(idxs):
     with pytest.raises(ValueError, match="unknown key"):
         multi_search(idxs, [{"index_uid": "a", "q": "x", "facets": ["y"]}])

@@ -377,3 +377,157 @@ def test_multi_search_cli_translate_validation():
         "index_uid": "a", "q": "x", "k": 5,
         "matching_strategy": "all", "hits_per_page": 3,
     }]
+
+
+# ---------------------------------- single query == batch of one
+
+
+def _answer(resp: dict) -> dict:
+    """The part of a response both modes share (hits + page meta)."""
+    return {
+        k: resp[k]
+        for k in ("hits", "page", "hitsPerPage", "totalHits", "totalPages")
+        if k in resp
+    }
+
+
+# (flags, --query text, its --queries-file line): "wibacx" is one typo
+# from the corpus word "wibace"; a blank line is skipped in a queries
+# file, so the empty query's batch twin is a line with no indexable
+# token — the same placeholder search
+PARITY = [
+    ([], QUERY, QUERY),
+    (["--filter", "role = 'user'"], QUERY, QUERY),
+    (["--typo"], "wibacx cedi", "wibacx cedi"),
+    (["--prefix"], "baba ced", "baba ced"),
+    (["--matching-strategy", "all"], QUERY, QUERY),
+    (["--matching-strategy", "frequency"], QUERY, QUERY),
+    ([], "baba -cedi", "baba -cedi"),
+    ([], "", "?"),
+    (["--page", "2", "--hits-per-page", "3"], QUERY, QUERY),
+    (["--hits-per-page", "0"], QUERY, QUERY),
+    (["--typo"], "wibacx -cedi", "wibacx -cedi"),
+    (["--prefix", "--typo"], "wibacx ced", "wibacx ced"),
+]
+
+
+@pytest.mark.parametrize(
+    "flags,query,line", PARITY,
+    ids=[" ".join(f) + f" q={q!r}" for f, q, _ in PARITY],
+)
+def test_single_query_equals_batch_of_one(
+    saved, monkeypatch, capsys, tmp_path, flags, query, line
+):
+    qf = tmp_path / "qs.txt"
+    qf.write_text(f"{line}\n")
+    (batch,) = _run_cli_lines(
+        monkeypatch, capsys,
+        "--index-dir", saved.index_dir, "--queries-file", str(qf), *flags,
+    )
+    single = _run_cli(
+        monkeypatch, capsys,
+        "--index-dir", saved.index_dir, "--query", query, *flags,
+    )
+    assert _answer(single) == _answer(batch)
+    assert single["hits"] or "--hits-per-page" in flags
+
+
+def test_single_query_honours_exactness_rule(
+    saved, monkeypatch, capsys, tmp_path
+):
+    """rankingRules=['exactness']: the exactness data is the typed
+    query, so the rule orders hits and the single query answers in
+    the batch order, not by BM25 score alone; --mode wand exits."""
+    import shutil
+
+    from meilibridge_spark.sources.tables import update_settings
+
+    d = str(tmp_path / "exact")
+    shutil.copytree(saved.index_dir, d)
+    update_settings(d, {"rankingRules": ["exactness"]})
+    q = "loba suce muce"
+    qf = tmp_path / "qs.txt"
+    qf.write_text(f"{q}\n")
+    (batch,) = _run_cli_lines(
+        monkeypatch, capsys, "--index-dir", d, "--queries-file", str(qf),
+    )
+    single = _run_cli(monkeypatch, capsys, "--index-dir", d, "--query", q)
+    assert single["hits"] and _answer(single) == _answer(batch)
+    with pytest.raises(SystemExit):
+        _run_cli(
+            monkeypatch, capsys,
+            "--index-dir", d, "--query", q, "--mode", "wand",
+        )
+
+
+@pytest.fixture(scope="module")
+def all_frame(saved, spark, tmp_path_factory):
+    """A sortable-turn_idx copy of ``saved`` (settings-only commit), its
+    matching-strategy-all top max_total_hits frame ranked by score,
+    and doc_id -> (role, turn_idx)."""
+    import shutil
+
+    from meilibridge_spark.operators.search import search_many
+    from meilibridge_spark.sources.tables import (
+        load_snapshot,
+        update_settings,
+    )
+
+    d = str(tmp_path_factory.mktemp("qcli_sortable") / "idx")
+    shutil.copytree(saved.index_dir, d)
+    update_settings(d, {"sortableAttributes": ["turn_idx"]})
+    idx = load_snapshot(spark, d, IndexConfig(index_name="qcli"))
+    frame = search_many(
+        idx, [("q", QUERY)], k=idx.cfg.max_total_hits,
+        matching_strategy="all",
+    ).collect()
+    assert len(frame) > 10
+    ranked = sorted(frame, key=lambda r: (-round(r["score"], 9), r["doc_id"]))
+    doc = {
+        r["doc_id"]: (r["role"], r["turn_idx"])
+        for r in idx.docs.select("doc_id", "role", "turn_idx").collect()
+    }
+    return d, ranked, doc
+
+
+def _all_cli(monkeypatch, capsys, d, *extra):
+    return _run_cli(
+        monkeypatch, capsys, "--index-dir", d, "--query", QUERY,
+        "--matching-strategy", "all", *extra,
+    )
+
+
+def test_strategy_all_applies_facets(all_frame, monkeypatch, capsys):
+    d, ranked, doc = all_frame
+    counts: "dict[str, int]" = {}
+    for r in ranked:
+        role = doc[r["doc_id"]][0]
+        counts[role] = counts.get(role, 0) + 1
+    resp = _all_cli(monkeypatch, capsys, d, "--facets", "role")
+    assert resp["facetDistribution"] == {"role": counts}
+
+
+def test_strategy_all_applies_sort(all_frame, monkeypatch, capsys):
+    d, ranked, doc = all_frame
+    want = sorted(ranked, key=lambda r: -doc[r["doc_id"]][1])[:10]
+    resp = _all_cli(monkeypatch, capsys, d, "--sort", "turn_idx:desc")
+    assert [h["doc_id"] for h in resp["hits"]] == [r["doc_id"] for r in want]
+
+
+def test_strategy_all_applies_distinct_attr(all_frame, monkeypatch, capsys):
+    d, ranked, doc = all_frame
+    seen, want = set(), []
+    for r in ranked:
+        if doc[r["doc_id"]][0] not in seen:
+            seen.add(doc[r["doc_id"]][0])
+            want.append(r["doc_id"])
+    resp = _all_cli(monkeypatch, capsys, d, "--distinct-attr", "role")
+    assert [h["doc_id"] for h in resp["hits"]] == want
+
+
+def test_strategy_all_rejects_cutoff_ms(all_frame, monkeypatch, capsys):
+    """--cutoff-ms budgets only the driver scorer; search_many has no
+    per-query interrupt point, so the option exits there."""
+    with pytest.raises(SystemExit):
+        _all_cli(monkeypatch, capsys, all_frame[0], "--cutoff-ms", "50")
+    assert "--cutoff-ms" in capsys.readouterr().err
