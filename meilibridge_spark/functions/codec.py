@@ -1,7 +1,9 @@
 """Delta-gap + varint block codec for posting lists (SURVEY.md §2C).
 
-Vectorized numpy implementation — runs inside grouped-map pandas UDFs
-(posting build) and mapInPandas (query decode); no per-row Python.
+Vectorized numpy implementation, batched on both sides: the posting
+build encodes a whole Arrow batch of posting runs per encode_blocks_many
+call, and the query scorers decode a shard's or a fetch's blocks per
+decode_blocks call; no per-entry Python loop.
 
 Layout per posting block (<= block_size entries, docIDs strictly
 increasing):
@@ -23,13 +25,14 @@ import numpy as np
 _THRESHOLDS = np.array([1 << (7 * k) for k in range(1, 10)], dtype=np.uint64)
 
 
-def encode_varints(values: np.ndarray) -> bytes:
-    """LEB128-encode an array of non-negative ints, vectorized."""
+def _leb128_encode(values: np.ndarray) -> "tuple[np.ndarray, np.ndarray]":
+    """LEB128 bytes of an array of non-negative ints, vectorized ->
+    (uint8 buffer, bytes per value): the codec's one varint encoder."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
     n = v.size
     if n == 0:
-        return b""
-    if v.size and values.min() < 0:  # pragma: no cover - guarded upstream
+        return np.empty(0, dtype=np.uint8), np.empty(0, dtype=np.int64)
+    if values.min() < 0:  # pragma: no cover - guarded upstream
         raise ValueError("varint values must be non-negative")
     # bytes needed per value: 1 + count of thresholds <= v
     nbytes = 1 + (v[:, None] >= _THRESHOLDS[None, :]).sum(axis=1)
@@ -40,7 +43,12 @@ def encode_varints(values: np.ndarray) -> bytes:
         tmp >>= np.uint64(7)
     out[np.arange(n), nbytes - 1] &= 0x7F  # clear continuation on last byte
     mask = np.arange(10)[None, :] < nbytes[:, None]
-    return out[mask].tobytes()
+    return out[mask], nbytes
+
+
+def encode_varints(values: np.ndarray) -> bytes:
+    """LEB128-encode an array of non-negative ints, vectorized."""
+    return _leb128_encode(values)[0].tobytes()
 
 
 def _leb128(b: np.ndarray) -> np.ndarray:
@@ -70,6 +78,90 @@ def decode_varints(buf: bytes) -> np.ndarray:
     return _leb128(np.frombuffer(buf, dtype=np.uint8))
 
 
+#: encode_blocks_many's per-block output columns, in postings-table order
+BLOCK_FIELDS = (
+    "block_id", "n", "first_doc", "last_doc", "max_tf", "min_dl", "sum_tf",
+    "docs_bin", "tfs_bin", "dls_bin",
+)
+
+
+def _split_bytes(buf: np.ndarray, nbytes: np.ndarray, counts: np.ndarray):
+    """Cut an encoded varint buffer into consecutive pieces of
+    ``counts`` values each -> list of bytes."""
+    ends = np.zeros(nbytes.size + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=ends[1:])
+    cut = ends[np.concatenate(([0], np.cumsum(counts)))].tolist()
+    raw = buf.tobytes()
+    return [raw[lo:hi] for lo, hi in zip(cut[:-1], cut[1:])]
+
+
+def encode_blocks_many(
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    run_id: np.ndarray,
+    block_size: int,
+    shard_range: "int | None" = None,
+) -> "dict[str, np.ndarray | list]":
+    """Encode many posting runs into compressed blocks in one pass.
+
+    ``run_id`` names each entry's run (a term's postings); entries may
+    arrive in any order and are put in (run, doc_id) order by one
+    lexsort. A run holding a doc_id twice raises ValueError. Blocks
+    start at every run change, at every doc_id multiple of
+    ``shard_range`` and every ``block_size`` entries after either, so
+    block_id = shard_index * ceil(shard_range / block_size) + local
+    index (plain local index without ``shard_range``). That makes the
+    block layout a CANONICAL function of posting content alone —
+    independent of whether a term was encoded in one task, one task
+    per shard or one Arrow batch with many other terms — so the build,
+    a fresh rebuild and the incremental merger all produce
+    byte-identical rows (SURVEY §7 hard part (d)).
+
+    ``max_tf`` / ``min_dl`` / ``sum_tf`` are segment reductions, and
+    each binary field is ONE varint encode split per block by byte
+    offsets: the per-call cost, not the bytes, dominated a per-block
+    encoder.
+
+    Returns columns: ``run`` (each block's run_id) plus BLOCK_FIELDS,
+    blocks in (run, doc_id) order — ints as int64 arrays, the three
+    ``*_bin`` fields as lists of bytes.
+    """
+    run = np.asarray(run_id)
+    order = np.lexsort((doc_ids, run))
+    run = run[order]
+    d = np.asarray(doc_ids, dtype=np.int64)[order]
+    t = np.asarray(tfs, dtype=np.int64)[order]
+    l = np.asarray(dls, dtype=np.int64)[order]
+    n = d.size
+    same_run = run[1:] == run[:-1]
+    if (same_run & (d[1:] <= d[:-1])).any():
+        raise ValueError("doc_ids must be strictly increasing")
+    shard = d // shard_range if shard_range else np.zeros(n, dtype=np.int64)
+    seg = np.ones(n, dtype=bool)  # (run, shard) segment starts
+    seg[1:] = ~same_run | (shard[1:] != shard[:-1])
+    seg_at = np.flatnonzero(seg)
+    pos = np.arange(n) - np.repeat(seg_at, np.diff(np.append(seg_at, n)))
+    is_start = pos % block_size == 0
+    starts = np.flatnonzero(is_start)
+    counts = np.diff(np.append(starts, n))
+    per_shard = -(-shard_range // block_size) if shard_range else 0
+    gaps = (d[1:] - d[:-1])[~is_start[1:]]
+    return {
+        "run": run[starts],
+        "block_id": shard[starts] * per_shard + pos[starts] // block_size,
+        "n": counts,
+        "first_doc": d[starts],
+        "last_doc": d[starts + counts - 1],
+        "max_tf": np.maximum.reduceat(t, starts) if n else t,
+        "min_dl": np.minimum.reduceat(l, starts) if n else l,
+        "sum_tf": np.add.reduceat(t, starts) if n else t,
+        "docs_bin": _split_bytes(*_leb128_encode(gaps), counts - 1),
+        "tfs_bin": _split_bytes(*_leb128_encode(t), counts),
+        "dls_bin": _split_bytes(*_leb128_encode(l), counts),
+    }
+
+
 def encode_blocks(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
@@ -77,61 +169,22 @@ def encode_blocks(
     block_size: int,
     shard_range: "int | None" = None,
 ) -> "list[dict]":
-    """Split a docID-sorted posting run into compressed blocks.
-
-    With ``shard_range`` set, block segmentation restarts at every
-    doc_id multiple of shard_range and block_id = shard_index *
-    (shard_range // block_size) + local index. This makes the block
-    layout a CANONICAL function of posting content alone — independent
-    of whether a term was encoded in one task or one task per shard —
-    so the parallel sharded build, a fresh rebuild, and the incremental
-    merger all produce byte-identical rows (SURVEY §7 hard part (d)).
-
-    Returns a list of dicts matching the postings table schema fields
-    (block_id, n, first_doc, last_doc, max_tf, min_dl, sum_tf,
-    docs_bin, tfs_bin, dls_bin).
-    """
-    doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
-    dls = np.ascontiguousarray(dls, dtype=np.int64)
-    n = doc_ids.size
-    if n and not (np.diff(doc_ids) > 0).all():
+    """Split one docID-sorted posting run into compressed blocks: the
+    one-run case of encode_blocks_many, as a list of dicts with the
+    BLOCK_FIELDS keys. Raises ValueError unless doc_ids strictly
+    increase."""
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    if not (np.diff(doc_ids) > 0).all():
         raise ValueError("doc_ids must be strictly increasing")
-    blocks: list[dict] = []
-    if n == 0:
-        return blocks
-
-    def _emit(lo: int, hi: int, id_base: int) -> None:
-        for local, s in enumerate(range(lo, hi, block_size)):
-            e = min(s + block_size, hi)
-            d = doc_ids[s:e]
-            gaps = np.diff(d).astype(np.uint64)
-            blocks.append(
-                {
-                    "block_id": id_base + local,
-                    "n": int(e - s),
-                    "first_doc": int(d[0]),
-                    "last_doc": int(d[-1]),
-                    "max_tf": int(tfs[s:e].max()),
-                    "min_dl": int(dls[s:e].min()),
-                    "sum_tf": int(tfs[s:e].sum()),
-                    "docs_bin": encode_varints(gaps),
-                    "tfs_bin": encode_varints(tfs[s:e]),
-                    "dls_bin": encode_varints(dls[s:e]),
-                }
-            )
-
-    if shard_range is None:
-        _emit(0, n, 0)
-        return blocks
-    per_shard = -(-shard_range // block_size)  # blocks per full shard
-    shards = doc_ids // shard_range
-    starts = np.unique(shards, return_index=True)[1]
-    bounds = np.append(starts, n)
-    for i in range(starts.size):
-        lo = int(bounds[i])
-        _emit(lo, int(bounds[i + 1]), int(shards[lo]) * per_shard)
-    return blocks
+    cols = encode_blocks_many(
+        doc_ids, tfs, dls, np.zeros(doc_ids.size, dtype=np.int64),
+        block_size, shard_range,
+    )
+    fields = [
+        v.tolist() if isinstance(v, np.ndarray) else v
+        for v in (cols[f] for f in BLOCK_FIELDS)
+    ]
+    return [dict(zip(BLOCK_FIELDS, blk)) for blk in zip(*fields)]
 
 
 def decode_blocks(

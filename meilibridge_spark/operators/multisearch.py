@@ -12,8 +12,8 @@ options) and each group rides ONE ``search_many`` scatter-gather job —
 M requests over T indexes cost at most |distinct option groups| jobs,
 not M. Per-request ``k``/``offset`` never split a group: the group
 scores to the max needed depth and each request trims its own rank
-window from the (<= k rows/request) merged output — a broadcast join
-of a request-count-sized bounds table, nothing doc-granular.
+window from the (<= k rows/request) merged output — a filter against
+literal query_id -> offset / k maps, nothing doc-granular.
 
 Exhaustive-pagination requests (``page`` / ``hits_per_page``) group
 exactly like offset-mode ones — same option key plus (page,
@@ -81,6 +81,31 @@ _PAGE_META_COLS = (
     ("page", "int"),
     ("hits_per_page", "int"),
 )
+
+
+def _rank_window(
+    hits: DataFrame,
+    requests: "list[dict]",
+    req_nos: "list[int]",
+    default_k: int,
+) -> DataFrame:
+    """Keep each request's rank window ``(offset, offset + k]`` of a
+    group's gathered hits (query_id ``r<request_no>``). The windows are
+    literal query_id -> offset / k maps in the filter, so trimming adds
+    no join and no Spark job."""
+    qid, rank = F.col("query_id"), F.col("rank")
+
+    def lookup(key: str, default: int):
+        return F.create_map(
+            *(
+                F.lit(x)
+                for i in req_nos
+                for x in (f"r{i}", int(requests[i].get(key, default)))
+            )
+        )[qid]
+
+    off = lookup("offset", 0)
+    return hits.filter((rank > off) & (rank <= off + lookup("k", default_k)))
 
 
 def multi_search(
@@ -270,24 +295,8 @@ def multi_search(
             prefix=pfx,
             proximity_rank=prox,
         )
-        bounds = local_frame(
-            spark,
-            [
-                (
-                    f"r{i}",
-                    int(requests[i].get("offset", 0)),
-                    int(requests[i].get("k", default_k)),
-                )
-                for i in req_nos
-            ],
-            "query_id string, _off int, _k int",
-        )
         part = (
-            hits.join(F.broadcast(bounds), "query_id")
-            .filter(
-                (F.col("rank") > F.col("_off"))
-                & (F.col("rank") <= F.col("_off") + F.col("_k"))
-            )
+            _rank_window(hits, requests, req_nos, default_k)
             .select(
                 F.expr("cast(substring(query_id, 2) as int)").alias(
                     "request_no"
@@ -391,14 +400,8 @@ def multi_search(
             k=k_call, semantic_ratio=ratio, pool=pool,
             filter_docs=filter_docs,
         )
-        bounds = local_frame(
-            spark,
-            [(f"r{i}", int(requests[i].get("k", default_k))) for i in req_nos],
-            "query_id string, _k int",
-        )
         part = (
-            hits.join(F.broadcast(bounds), "query_id")
-            .filter(F.col("rank") <= F.col("_k"))
+            _rank_window(hits, requests, req_nos, default_k)
             .select(
                 F.expr("cast(substring(query_id, 2) as int)").alias(
                     "request_no"
@@ -459,14 +462,8 @@ def multi_search(
             )
         else:
             hits = cosine_topk(emb, qdf, k=k_call, exclude_self=False)
-        bounds = local_frame(
-            spark,
-            [(f"r{i}", int(requests[i].get("k", default_k))) for i in req_nos],
-            "query_id string, _k int",
-        )
         part = (
-            hits.join(F.broadcast(bounds), "query_id")
-            .filter(F.col("rank") <= F.col("_k"))
+            _rank_window(hits, requests, req_nos, default_k)
             .select(
                 F.expr("cast(substring(query_id, 2) as int)").alias(
                     "request_no"

@@ -4,16 +4,19 @@ Two-stage build with partition-local partial runs:
 
   stage 1 (mapInPandas, Arrow batch = the unit of locality): within
       each batch, flatten the per-doc (term, tf) arrays and group by
-      term with one stable numpy argsort — emitting ONE compact row per
-      (term, batch): (term, first_doc, doc_ids[], tfs[], dls[]). The
-      docs DataFrame is range-partitioned by doc_id (assign_doc_ids's
-      layout), so batches are disjoint doc_id ranges — the batch ID is
-      a natural salt: a hot Zipf-head term's postings are built by
-      every input partition in parallel instead of one straggler task.
-  stage 2 (groupBy(term).applyInPandas): concatenate a term's partial
-      runs, argsort by doc_id (correct under ANY input layout; ~free
-      when runs arrive range-ordered), delta-gap + varint block encode
-      (functions/codec.py).
+      (term, doc-shard) with one stable numpy argsort — emitting ONE
+      compact row per (term, shard, batch): (term, shard, doc_ids[],
+      tfs[], dls[]). A hot Zipf-head term's postings are built by every
+      input partition in parallel instead of one straggler task.
+  stage 2 (repartition(term, shard) + sortWithinPartitions +
+      mapInPandas): each partition's rows arrive sorted by (term,
+      shard), and each Arrow batch is encoded in ONE vectorized
+      codec.encode_blocks_many pass — one lexsort over (run, doc_id),
+      one varint encode per field — instead of one pandas call per
+      (term, shard) group. A group can straddle two batches, so each
+      batch's last group is carried into the next. The lexsort, not
+      the input layout, puts a run in doc order: partial runs arrive in
+      any batch order.
 
 Compared to the textbook salted groupBy (shuffle every (term, doc_id,
 tf, dl) tuple, then merge), the only wide exchange here moves ~(terms x
@@ -21,13 +24,13 @@ batches) compressed ARRAY rows — orders of magnitude fewer rows at any
 scale, and skew-free by construction.
 
 Encoding is content-deterministic: the same corpus yields byte-identical
-postings regardless of partitioning (resume/identity tests rely on it).
+postings regardless of partitioning or batching (resume/identity tests
+rely on it).
 
-Scale note (10^12 turns): a single row per term bounds a hot term's
-postings to one stage-2 task. The evolution path is doc-range index
+Scale note (10^12 turns): stage 2 keys on (term, doc-shard), so a hot
+term's postings spread over n_docs/shard_range groups — doc-range index
 shards (Lucene-segment style: postings per (shard, term), queries merge
-per-shard top-k exactly) — the stage-1 output here already IS that
-sharded form.
+per-shard top-k exactly).
 """
 
 from __future__ import annotations
@@ -40,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from meilibridge_spark.config import IndexConfig
-from meilibridge_spark.functions.codec import encode_blocks
+from meilibridge_spark.functions.codec import BLOCK_FIELDS, encode_blocks_many
 
 POSTINGS_SCHEMA = (
     "term string, block_id long, n int, first_doc long, last_doc long, "
@@ -48,19 +51,7 @@ POSTINGS_SCHEMA = (
     "docs_bin binary, tfs_bin binary, dls_bin binary"
 )
 
-POSTING_COLUMNS = [
-    "term",
-    "block_id",
-    "n",
-    "first_doc",
-    "last_doc",
-    "max_tf",
-    "min_dl",
-    "sum_tf",
-    "docs_bin",
-    "tfs_bin",
-    "dls_bin",
-]
+POSTING_COLUMNS = ["term", *BLOCK_FIELDS]
 
 PARTIAL_SCHEMA = (
     "term string, shard long, doc_ids array<long>, "
@@ -142,38 +133,70 @@ def _make_partial_runs(shard_range: int):
     return run
 
 
-def _make_encoder(block_size: int, shard_range: int):
+def encode_runs(
+    run_terms: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    run_id: np.ndarray,
+    block_size: int,
+    shard_range: int,
+) -> pd.DataFrame:
+    """Posting runs -> postings rows (POSTING_COLUMNS) in one
+    encode_blocks_many pass; entry i belongs to run ``run_id[i]``, whose
+    term is ``run_terms[run_id[i]]``."""
+    cols = encode_blocks_many(
+        doc_ids, tfs, dls, run_id, block_size, shard_range
+    )
+    cols["term"] = np.asarray(run_terms, dtype=object)[cols.pop("run")]
+    return pd.DataFrame(cols, columns=POSTING_COLUMNS)
+
+
+def _make_batch_encoder(block_size: int, shard_range: int):
     def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        doc_ids = np.concatenate(
-            [np.asarray(a, dtype=np.int64) for a in pdf["doc_ids"]]
+        term = pdf["term"].to_numpy()
+        shard = pdf["shard"].to_numpy()
+        new_run = np.ones(len(pdf), dtype=bool)
+        new_run[1:] = (term[1:] != term[:-1]) | (shard[1:] != shard[:-1])
+        lens = np.fromiter(map(len, pdf["doc_ids"]), np.int64, len(pdf))
+        return encode_runs(
+            term[new_run],
+            np.concatenate(pdf["doc_ids"].to_list()),
+            np.concatenate(pdf["tfs"].to_list()),
+            np.concatenate(pdf["dls"].to_list()),
+            np.repeat(np.cumsum(new_run) - 1, lens),
+            block_size,
+            shard_range,
         )
-        tfs = np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["tfs"]])
-        dls = np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["dls"]])
-        # runs arrive in arbitrary batch order; one vectorized argsort
-        # restores global doc order (correct for any input layout)
-        order = np.argsort(doc_ids, kind="stable")
-        doc_ids, tfs, dls = doc_ids[order], tfs[order], dls[order]
-        blocks = encode_blocks(doc_ids, tfs, dls, block_size, shard_range)
-        out = pd.DataFrame(blocks)
-        out.insert(0, "term", pdf["term"].iloc[0])
-        return out[POSTING_COLUMNS]
 
-    return encode
+    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        # rows arrive sorted by (term, shard); a group can straddle an
+        # Arrow batch, so each batch's last group waits for the next
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if pdf.empty:
+                continue
+            last = (pdf["term"] == pdf["term"].iat[-1]) & (
+                pdf["shard"] == pdf["shard"].iat[-1]
+            )
+            cut = int(np.argmax(last.to_numpy()))
+            carry = pdf.iloc[cut:]
+            if cut:
+                yield encode(pdf.iloc[:cut])
+        if carry is not None:
+            yield encode(carry)
+
+    return run
 
 
-def build_postings(
-    docs: DataFrame,
-    cfg: IndexConfig,
-    doc_sorted: bool = True,
-) -> DataFrame:
+def build_postings(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
     """docs(doc_id, terms, dl) -> postings blocks (POSTINGS_SCHEMA).
 
-    Stage-2 parallelism is per (term, doc-shard), so a hot Zipf-head
-    term encodes in n_docs/shard_range parallel tasks; canonical
-    shard-aligned block ids keep the output byte-identical to any other
-    build path. ``doc_sorted`` is advisory only (kept for callers that
-    know their layout; correctness never depends on it)."""
-    del doc_sorted
+    Stage 2's partition count is AQE-sized, as a groupBy's would be;
+    canonical shard-aligned block ids keep the output byte-identical to
+    any other build path."""
     src = docs.select(
         "doc_id",
         F.col("terms.terms").alias("terms_arr"),
@@ -183,8 +206,13 @@ def build_postings(
     partial = src.mapInPandas(
         _make_partial_runs(cfg.shard_range), schema=PARTIAL_SCHEMA
     )
-    return partial.groupBy("term", "shard").applyInPandas(
-        _make_encoder(cfg.block_size, cfg.shard_range), schema=POSTINGS_SCHEMA
+    return (
+        partial.repartition("term", "shard")
+        .sortWithinPartitions("term", "shard")
+        .mapInPandas(
+            _make_batch_encoder(cfg.block_size, cfg.shard_range),
+            schema=POSTINGS_SCHEMA,
+        )
     )
 
 

@@ -5,8 +5,10 @@ docs at a time into Meilisearch with a WaitForTask barrier per batch)
 becomes ONE declarative Spark job:
 
   read source -> project (S7) -> dense docIDs -> tokenize (scalar
-  pandas UDF) -> explode -> salted two-stage groupBy -> applyInPandas
-  block encode -> write snapshot tables + manifest commit.
+  pandas UDF) -> per-Arrow-batch (term, shard) partial runs
+  (mapInPandas) -> repartition + sort by (term, shard) -> batched block
+  encode, one vectorized pass per Arrow batch (mapInPandas,
+  operators/postings.py) -> write snapshot tables + manifest commit.
 
 Resumability (north_star): the build is staged through on-disk staging
 dirs with _SUCCESS markers; re-running after a kill skips completed
@@ -53,7 +55,7 @@ def build_index(
     docs = assemble_docs(source, cfg, doc_id_col=doc_id_col)
     slim = docs.select("doc_id", "terms", "dl").persist()
     n_docs, avgdl = corpus_stats(slim)
-    postings = build_postings(slim, cfg, doc_sorted=doc_id_col is None)
+    postings = build_postings(slim, cfg)
     terms = term_stats(postings)
     attrs = None
     if with_attributes:
@@ -117,8 +119,7 @@ def build_and_save(
 
     # stage 2: postings blocks
     if not _success(postings_path):
-        # staged docs parquet loses the range layout -> re-range inside
-        postings = build_postings(docs, cfg, doc_sorted=False)
+        postings = build_postings(docs, cfg)
         postings.write.mode("overwrite").parquet(postings_path)
     postings = spark.read.parquet(postings_path)
 

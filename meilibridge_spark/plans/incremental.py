@@ -32,11 +32,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from meilibridge_spark.config import IndexConfig
-from meilibridge_spark.functions.codec import decode_blocks, encode_blocks
+from meilibridge_spark.functions.codec import decode_blocks
 from meilibridge_spark.operators.docs import assign_doc_ids, make_term_freq_udf
 from meilibridge_spark.operators.postings import (
-    POSTING_COLUMNS,
     POSTINGS_SCHEMA,
+    encode_runs,
     term_stats,
 )
 from meilibridge_spark.sources.cdc import fold_events
@@ -62,13 +62,11 @@ def _make_merger(block_size: int, shard_range: int):
             d = np.concatenate([d, adds["doc_id"].to_numpy(dtype=np.int64)])
             t = np.concatenate([t, adds["tf"].to_numpy(dtype=np.int64)])
             l = np.concatenate([l, adds["dl"].to_numpy(dtype=np.int64)])
-            order = np.argsort(d, kind="stable")
-            d, t, l = d[order], t[order], l[order]
-        if d.size == 0:
-            return pd.DataFrame(columns=POSTING_COLUMNS)
-        out = pd.DataFrame(encode_blocks(d, t, l, block_size, shard_range))
-        out.insert(0, "term", term)
-        return out[POSTING_COLUMNS]
+        # one run; encode_runs puts it in doc order
+        return encode_runs(
+            [term], d, t, l, np.zeros(d.size, dtype=np.int64),
+            block_size, shard_range,
+        )
 
     return merge
 

@@ -5,10 +5,12 @@ import numpy as np
 import pytest
 
 from meilibridge_spark.functions.codec import (
+    BLOCK_FIELDS,
     decode_block,
     decode_blocks,
     decode_varints,
     encode_blocks,
+    encode_blocks_many,
     encode_varints,
 )
 
@@ -252,3 +254,88 @@ def test_shard_decoders_match_per_block_reference():
     same(_decode_shard_attrs(rows, base), ref_attrs)
     same(_decode_shard_attrs(rows, base, 0b0110), ref_on, drop_empty=True)
     same(_decode_shard_attr_masks(rows, base), ref_raw)
+
+
+def _random_runs(rng, n_runs, shard_range):
+    """Random posting runs with shard crossings, the first one a
+    single entry -> [(doc_ids, tfs, dls)], each doc-sorted."""
+    runs = []
+    for i in range(n_runs):
+        n = 1 if i == 0 else int(rng.choice([1, 2, int(rng.integers(3, 300))]))
+        ids = np.sort(rng.choice(6 * shard_range, size=n, replace=False))
+        runs.append(
+            (ids.astype(np.int64), rng.integers(1, 300, size=n),
+             rng.integers(1, 10**6, size=n))
+        )
+    return runs
+
+
+def _per_block_reference(doc_ids, tfs, dls, block_size, shard_range):
+    """Block-at-a-time loop encoder of one doc-sorted run: the layout
+    the batched encoder must reproduce byte for byte."""
+    blocks = []
+    shards = doc_ids // shard_range if shard_range else np.zeros_like(doc_ids)
+    per_shard = -(-shard_range // block_size) if shard_range else 0
+    for shard in np.unique(shards):
+        idx = np.flatnonzero(shards == shard)
+        for local, s in enumerate(range(idx[0], idx[-1] + 1, block_size)):
+            e = min(s + block_size, idx[-1] + 1)
+            d, t, l = doc_ids[s:e], tfs[s:e], dls[s:e]
+            blocks.append({
+                "block_id": int(shard) * per_shard + local,
+                "n": e - s,
+                "first_doc": int(d[0]),
+                "last_doc": int(d[-1]),
+                "max_tf": int(t.max()),
+                "min_dl": int(l.min()),
+                "sum_tf": int(t.sum()),
+                "docs_bin": encode_varints(np.diff(d)),
+                "tfs_bin": encode_varints(t),
+                "dls_bin": encode_varints(l),
+            })
+    return blocks
+
+
+@pytest.mark.parametrize("block_size", [2, 3, 128])
+@pytest.mark.parametrize("shard_range", [None, 64, 1000])
+@pytest.mark.parametrize("seed", range(3))
+def test_encode_blocks_many_equals_per_run_encode(seed, shard_range, block_size):
+    """One batched pass over shuffled entries of many runs equals
+    concatenating each run's encode_blocks, block for block; and each
+    run's encode_blocks equals the block-at-a-time loop encoder."""
+    rng = np.random.default_rng(seed)
+    runs = _random_runs(rng, int(rng.integers(1, 12)), shard_range or 500)
+    for run in runs:
+        assert encode_blocks(*run, block_size, shard_range) == (
+            _per_block_reference(*run, block_size, shard_range)
+        )
+    want = [
+        (r, *(blk[f] for f in BLOCK_FIELDS))
+        for r, run in enumerate(runs)
+        for blk in encode_blocks(*run, block_size, shard_range)
+    ]
+    cat = [np.concatenate(x) for x in zip(*runs)]
+    run_id = np.repeat(np.arange(len(runs)), [run[0].size for run in runs])
+    perm = rng.permutation(run_id.size)
+    cols = encode_blocks_many(
+        *(x[perm] for x in cat), run_id[perm], block_size, shard_range
+    )
+    got = list(zip(*(
+        v.tolist() if isinstance(v, np.ndarray) else v
+        for v in (cols[f] for f in ("run", *BLOCK_FIELDS))
+    )))
+    assert got == want
+
+
+def test_encode_blocks_many_empty_and_rejects_repeats():
+    e = np.empty(0, dtype=np.int64)
+    cols = encode_blocks_many(e, e, e, e, 128, 1 << 14)
+    assert set(cols) == {"run", *BLOCK_FIELDS}
+    assert all(len(v) == 0 for v in cols.values())
+    one = np.ones(3, dtype=np.int64)
+    # the same doc_id in two runs is fine; twice in one run raises
+    encode_blocks_many(np.array([4, 4, 9]), one, one, np.array([0, 1, 1]), 2)
+    with pytest.raises(ValueError, match="strictly increasing"):
+        encode_blocks_many(
+            np.array([4, 9, 4]), one, one, np.array([1, 0, 1]), 2, 64
+        )

@@ -105,6 +105,59 @@ def test_df_invariant(built, oracle):
     assert got == dict(oracle.df)
 
 
+def test_batched_encoder_matches_per_group_reference(spark, built):
+    """Stage 2 encodes one Arrow batch at a time and carries a batch's
+    last (term, shard) group into the next. With three rows per Arrow
+    batch most groups straddle a batch boundary; the rows still equal
+    encoding each (term, shard) group on its own."""
+    import dataclasses
+
+    from meilibridge_spark.functions.codec import encode_blocks
+    from meilibridge_spark.operators.postings import (
+        POSTING_COLUMNS,
+        build_postings,
+    )
+
+    cfg = dataclasses.replace(CFG, block_size=3, shard_range=64)
+    slim = built.docs.select("doc_id", "terms", "dl")
+    groups = {}
+    for r in slim.collect():
+        for term, tf in zip(r["terms"]["terms"], r["terms"]["tfs"]):
+            key = (term, r["doc_id"] // cfg.shard_range)
+            groups.setdefault(key, []).append((r["doc_id"], tf, r["dl"]))
+    want = sorted(
+        (term, *(blk[f] for f in POSTING_COLUMNS[1:]))
+        for (term, _), entries in groups.items()
+        for blk in encode_blocks(
+            *(np.array(c) for c in zip(*sorted(entries))),
+            cfg.block_size,
+            cfg.shard_range,
+        )
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = sorted(tuple(r) for r in build_postings(slim, cfg).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+
+
+def test_build_postings_plan_has_no_grouped_udf(built):
+    """Both build stages are mapInPandas: stage 2 encodes whole Arrow
+    batches, not one pandas call per (term, shard) group."""
+    from meilibridge_spark.operators.postings import build_postings
+
+    def plan(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    slim = built.docs.select("doc_id", "terms", "dl")
+    got = plan(build_postings(slim, CFG))
+    assert got.count("MapInPandas") == plan(slim).count("MapInPandas") + 2
+    assert "FlatMapGroupsInPandas" not in got, got
+
+
 def test_pagination_invariant(built):
     """sum(per-partition counts) == total (mysql_test.go:115 analog)."""
     from meilibridge_spark.sources.tables import partition_lineage

@@ -175,6 +175,40 @@ def test_offset_mode_collect_runs_no_sort_jobs(idxs):
     assert keys == [(0, 2), (0, 3), (1, 1), (1, 2), (1, 3)]
 
 
+def test_offset_mode_windows_run_no_join_jobs(idxs):
+    """Per-request (offset, k) windows are a filter against literal
+    maps, not a broadcast join with a window table: a two-request
+    offset-mode multi_search, call and collect, runs fewer than the 4
+    Spark jobs a broadcast window join costs."""
+    import itertools
+
+    sc = idxs["a"].postings.sparkSession.sparkContext
+    seq = itertools.count()
+
+    def count_jobs(fn):
+        group = f"test-multi-search-window-jobs-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    reqs = [
+        {"index_uid": "a", "q": "spark join", "k": 2, "offset": 1},
+        {"index_uid": "a", "q": "join", "k": 3},
+    ]
+    multi_search(idxs, reqs).collect()  # warm the idf memo
+    rows, jobs = count_jobs(lambda: multi_search(idxs, reqs).collect())
+    assert jobs < 4, jobs
+    keys = [(r["request_no"], r["rank"]) for r in rows]
+    assert keys == [(0, 2), (0, 3), (1, 1), (1, 2), (1, 3)]
+    plan = multi_search(idxs, reqs)._jdf.queryExecution().optimizedPlan()
+    assert "Join" not in plan.toString(), plan.toString()
+
+
 def test_validation_rejects_non_int_window_keys(idxs):
     """An endpoint body's null / string / bool limit or offset (and a
     non-int page or hitsPerPage) is a request error naming the key,
