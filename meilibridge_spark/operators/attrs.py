@@ -40,6 +40,7 @@ from meilibridge_spark.config import IndexConfig
 from meilibridge_spark.functions.tokenizer import tokenize_series
 from meilibridge_spark.operators.docs import TERMS_FIELD
 from meilibridge_spark.operators.postings import build_postings
+from meilibridge_spark.session import trim_importer_cache
 
 #: best_attr when a matched (term, doc) has no attribute info — ranks
 #: below every real attribute index
@@ -73,6 +74,7 @@ def make_attr_rank_udf(analyzer, n_attrs: int):
 
     @F.pandas_udf(TERMS_FIELD)
     def attr_rank_udf(*cols: pd.Series) -> pd.DataFrame:
+        trim_importer_cache()
         tok_lists = [tokenize_series(c, analyzer) for c in cols]
         terms_out: "list[list[str]]" = []
         masks_out: "list[list[int]]" = []

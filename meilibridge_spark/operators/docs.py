@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from meilibridge_spark.config import AnalyzerConfig, IndexConfig
 from meilibridge_spark.functions.tokenizer import term_freq_frame
+from meilibridge_spark.session import trim_importer_cache
 
 #: struct-of-arrays term-frequency layout (cheap through Arrow)
 TERMS_FIELD = T.StructType(
@@ -176,6 +177,7 @@ def make_term_freq_udf(analyzer: AnalyzerConfig):
 
     @F.pandas_udf(TERMS_FIELD)
     def term_freq_udf(texts: pd.Series) -> pd.DataFrame:
+        trim_importer_cache()
         return term_freq_frame(texts, analyzer)
 
     return term_freq_udf

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from meilibridge_spark.operators.search import InvertedIndex, search, search_many
 from meilibridge_spark.operators.similarity import _cos, _cos_pre, _with_norm
+from meilibridge_spark.session import local_frame
 
 
 def search_hybrid(
@@ -285,9 +286,10 @@ def search_hybrid_many(
     if missing:
         raise ValueError(f"query_vecs missing ids: {missing}")
     spark = emb.sparkSession
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(qid, [float(x) for x in query_vecs[qid]]) for qid, _ in queries],
-        schema="query_id string, qv array<double>",
+        "query_id string, qv array<double>",
     )
     # query norms ride the (tiny, broadcast) panel so the corpus scan
     # pays ONE aggregate per row — the doc norm — instead of three per
@@ -301,7 +303,8 @@ def search_hybrid_many(
             index, queries, k=pool, words_rank=True,
             filter_docs=filter_docs,
         )
-        nq = spark.createDataFrame(
+        nq = local_frame(
+            spark,
             [
                 (qid, len(parse_query(q, index.cfg.analyzer)))
                 for qid, q in queries
@@ -379,7 +382,8 @@ def search_hybrid_many(
                 probe_pairs.extend(
                     (qid, qvl, cid) for _, cid in scored[:n_probe]
                 )
-            probes = spark.createDataFrame(
+            probes = local_frame(
+                spark,
                 probe_pairs,
                 "query_id string, qv array<double>, centroid_id long",
             )

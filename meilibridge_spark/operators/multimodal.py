@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from meilibridge_spark.session import trim_importer_cache
+
 ASSET_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType(), False),
@@ -82,6 +84,7 @@ def extract_features(assets: DataFrame, real_decode: bool = False) -> DataFrame:
     real decoder would use."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_importer_cache()
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -168,6 +171,7 @@ def resize_images(
     ).select("asset_id", "payload", "out_w", "out_h")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_importer_cache()
         for pdf in batches:
             if pdf.empty:
                 continue

@@ -43,6 +43,7 @@ from meilibridge_spark.functions.tokenizer import (
     tokenize,
 )
 from meilibridge_spark.operators.search import search
+from meilibridge_spark.session import local_frame, trim_importer_cache
 from meilibridge_spark.sources.tables import InvertedIndex
 
 POSITIONS_SCHEMA = "term string, doc_id long, positions array<int>"
@@ -53,6 +54,7 @@ def _make_position_rows(cfg: AnalyzerConfig):
     lowercase = cfg.lowercase
 
     def rows(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        trim_importer_cache()
         # same analyzer resolution as the main tokenizer (separator /
         # non-separator tokens included) so positional postings stay
         # consistent with the inverted index
@@ -229,7 +231,7 @@ def match_positions(
     terms = parse_query(query, index.cfg.analyzer)
     spark = index.postings.sparkSession
     if not terms:
-        return spark.createDataFrame([], "doc_id long, term string, pos int")
+        return local_frame(spark, [], "doc_id long, term string, pos int")
     from meilibridge_spark.operators.search import terms_in
 
     rows = positions.filter(terms_in("term", list(terms)))
@@ -396,8 +398,8 @@ def phrase_search(
     steps = phrase_steps(phrase, index.cfg.analyzer)
     spark = index.postings.sparkSession
     if not steps:
-        return spark.createDataFrame(
-            [], "doc_id long, score double, matched_terms int"
+        return local_frame(
+            spark, [], "doc_id long, score double, matched_terms int"
         )
     docs = phrase_candidates(positions, steps)
     seen: "list[str]" = []

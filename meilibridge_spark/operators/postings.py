@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from meilibridge_spark.config import IndexConfig
 from meilibridge_spark.functions.codec import BLOCK_FIELDS, encode_blocks_many
+from meilibridge_spark.session import trim_importer_cache
 
 POSTINGS_SCHEMA = (
     "term string, block_id long, n int, first_doc long, last_doc long, "
@@ -83,6 +84,7 @@ def explode_terms(docs: DataFrame) -> DataFrame:
 
 def _make_partial_runs(shard_range: int):
     def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        trim_importer_cache()
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -170,6 +172,7 @@ def _make_batch_encoder(block_size: int, shard_range: int):
         )
 
     def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        trim_importer_cache()
         # rows arrive sorted by (term, shard); a group can straddle an
         # Arrow batch, so each batch's last group waits for the next
         carry = None

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from meilibridge_spark.session import local_frame
+
 #: Forced-broadcast ceiling for hit sets: ~100k rows of
 #: (doc_id, score, matched_terms) is ~2 MB serialized — safely below
 #: any executor budget. Above it (or with no bound at all) the join
@@ -362,9 +364,10 @@ def facet_distribution_exhaustive(
 
     terms = parse_query(query_text, index.cfg.analyzer)
     if not terms:
-        spark = index.docs.sparkSession
-        return spark.createDataFrame(
-            [], "facet string, value string, count bigint"
+        return local_frame(
+            index.docs.sparkSession,
+            [],
+            "facet string, value string, count bigint",
         )
     cand = candidate_rows(index, terms).select("doc_id").distinct()
     if filter_docs is not None:

@@ -45,7 +45,7 @@ from meilibridge_spark.functions.wand import (
     wand_topk_budgeted,
 )
 from meilibridge_spark.operators.ranking import RankingPlan, resolve_ranking
-from meilibridge_spark.session import local_frame
+from meilibridge_spark.session import local_frame, trim_importer_cache
 from meilibridge_spark.sources.tables import InvertedIndex
 
 DECODED_SCHEMA = "term string, doc_id long, tf long, dl long"
@@ -105,6 +105,7 @@ def decode_postings(postings: DataFrame) -> DataFrame:
     )
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_importer_cache()
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -1528,6 +1529,7 @@ def _make_shard_scorer(score, shard_range: int):
     the same exchange (no extra doc-granular traffic)."""
 
     def scorer(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        trim_importer_cache()
         # buffer the partition's (compressed) blocks grouped by shard
         by_shard: "dict[int, list]" = {}
         attr_by_shard: "dict[int, list]" = {}
@@ -1570,6 +1572,7 @@ def _make_filtered_shard_scorer(
     empty = pd.DataFrame({c: [] for c in columns})
 
     def scorer(key, blocks_pdf: pd.DataFrame, right_pdf: pd.DataFrame) -> pd.DataFrame:
+        trim_importer_cache()
         if blocks_pdf.empty:
             return empty
         base = int(key[0]) * shard_range
@@ -3034,6 +3037,7 @@ def build_typo_table(terms_df: DataFrame) -> DataFrame:
     depth = TYPO_INDEX_DEPTH
 
     def expand(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        trim_importer_cache()
         for pdf in batches:
             if pdf.empty:
                 continue

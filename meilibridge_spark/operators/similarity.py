@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from meilibridge_spark.session import local_frame
+
 
 def _dot(a: "F.Column", b: "F.Column") -> "F.Column":
     return F.aggregate(
@@ -584,9 +586,10 @@ def ivf_train_kmeans(
             if norm > 0:
                 new[int(r["centroid_id"])] = [x / norm for x in v]
         prev = new
-        cents = spark.createDataFrame(
+        cents = local_frame(
+            spark,
             sorted((cid, vec) for cid, vec in prev.items()),
-            f"centroid_id long, centroid_vec array<float>",
+            "centroid_id long, centroid_vec array<float>",
         )
     return cents
 
@@ -795,7 +798,7 @@ def apply_cdc_vector_index(
     else:
         touched = touched.distinct()
         # empty-but-schemaed frame so the delta table always exists
-        new_rows = spark.createDataFrame([], vec.assigned.schema)
+        new_rows = local_frame(spark, [], vec.assigned.schema)
     assigned_new = (
         vec.assigned.join(F.broadcast(touched), idc, "left_anti")
         .unionByName(new_rows)
@@ -906,7 +909,7 @@ def similar_documents(
     missing = [i for i in ids if i not in found]
     if missing:
         raise ValueError(f"unknown target id(s): {missing}")
-    targets = emb.sparkSession.createDataFrame(rows, targets.schema)
+    targets = local_frame(emb.sparkSession, rows, targets.schema)
     cands = emb
     if filter_docs is not None:
         cands = cands.join(filter_docs.select(id_col), id_col, "left_semi")

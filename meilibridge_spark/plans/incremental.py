@@ -39,12 +39,14 @@ from meilibridge_spark.operators.postings import (
     encode_runs,
     term_stats,
 )
+from meilibridge_spark.session import trim_importer_cache
 from meilibridge_spark.sources.cdc import fold_events
 from meilibridge_spark.sources.tables import InvertedIndex
 
 
 def _make_merger(block_size: int, shard_range: int):
     def merge(key, old_pdf: pd.DataFrame, delta_pdf: pd.DataFrame) -> pd.DataFrame:
+        trim_importer_cache()
         term = key[0]
         # decode surviving old entries
         if old_pdf.empty:

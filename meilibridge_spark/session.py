@@ -8,8 +8,52 @@ nothing else changes (SURVEY.md §4).
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# len(sys.path_importer_cache) right after this process's last trim
+_trimmed_len = -1
+
+
+def trim_importer_cache() -> None:
+    """Drop the cached zip importers of archives that cannot change
+    while a Spark application runs. Call it first in every Python UDF
+    body.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the
+    start of every task, and on CPython >= 3.11 that makes each
+    ``zipimporter`` in ``sys.path_importer_cache`` re-read its
+    archive's whole central directory: a dozen importers over
+    ``pyspark.zip`` (one per imported subpackage), two over py4j and
+    two over the spark-core jar Spark puts on the worker's path, tens
+    of thousands of entries per task and most of a small task's
+    worker time. Dropped are importers over the archive holding the
+    loaded ``pyspark``, the one holding ``py4j``, the one holding this
+    package (a ``--py-files`` zip) and any ``.jar``; an unrelated zip
+    keeps its importer. A dropped entry is rebuilt by the path hooks
+    on the next import that needs it, from zipimport's directory
+    cache, so the next task's ``invalidate_caches()`` reads nothing.
+    Where pyspark is not zipped (the driver) only jar importers, if
+    any, go. Returns at once when the cache has not grown or shrunk
+    since the last trim (grouped UDFs call this once per group)."""
+    global _trimmed_len
+    cache = sys.path_importer_cache
+    if len(cache) == _trimmed_len:
+        return
+    fixed = set()
+    for name in ("pyspark", "py4j", __name__.partition(".")[0]):
+        loader = getattr(sys.modules.get(name), "__loader__", None)
+        if isinstance(loader, zipimport.zipimporter):
+            fixed.add(loader.archive)
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and (
+            finder.archive in fixed or finder.archive.endswith(".jar")
+        ):
+            cache.pop(path, None)
+    _trimmed_len = len(cache)
 
 
 def build_session(
@@ -51,7 +95,9 @@ def build_session(
     return spark
 
 
-def local_frame(spark: SparkSession, rows: "list[tuple]", schema: str) -> DataFrame:
+def local_frame(
+    spark: SparkSession, rows: "list[tuple]", schema: "str | StructType"
+) -> DataFrame:
     """Small driver-built rows -> a DataFrame planned as a
     ``LocalRelation``.
 
@@ -60,13 +106,13 @@ def local_frame(spark: SparkSession, rows: "list[tuple]", schema: str) -> DataFr
     even empty, or broadcasting it into a join) runs Spark jobs of
     Python tasks to read rows the driver already holds. An Arrow table
     goes to the JVM as a local relation instead, and reading it runs no
-    job. ``schema`` is a DDL string, as for ``createDataFrame``. For
-    driver-bounded data only: the rows live in the plan."""
+    job. ``schema`` is a DDL string or a ``StructType``, as for
+    ``createDataFrame``. For driver-bounded data only: the rows live in
+    the plan."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
-    struct = StructType.fromDDL(schema)
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
     arrow = to_arrow_schema(struct)
     cols = list(zip(*rows)) if rows else [()] * len(arrow)
     table = pa.Table.from_arrays(

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from meilibridge_spark.session import trim_importer_cache
 from meilibridge_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 CDC_SCHEMA = T.StructType(
@@ -63,6 +64,7 @@ def fold_events(cdc: DataFrame, docs: DataFrame) -> DataFrame:
     ev = cdc.join(cur, ["conv_id", "turn_idx"], "left")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        trim_importer_cache()
         pdf = pdf.sort_values("ts", kind="stable")
         first = pdf.iloc[0]
         conv_id, turn_idx = first["conv_id"], int(first["turn_idx"])

@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from meilibridge_spark.session import trim_importer_cache
+
 TRANSCRIPT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -118,6 +120,7 @@ def generate_transcripts(
     parts = num_partitions or min(max(1, n_convs // 8), 64)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_importer_cache()
         for pdf in batches:
             frames = [
                 _gen_conv(int(cid), seed, vocab, probs) for cid in pdf["id"]

@@ -321,3 +321,31 @@ def test_positions_with_separator_settings(spark):
     assert [r["doc_id"] for r in hits2.collect()] == [2]
     mp = match_positions(idx, "state-of-the-art", positions=pos)
     assert [(r["doc_id"], r["pos"]) for r in mp.collect()] == [(0, 0)]
+
+
+def test_stop_word_only_phrase_and_facet_searches_run_no_job(built):
+    """A phrase, match-positions or exhaustive facet search whose query
+    is all stop words answers with a driver-built empty frame (a local
+    relation): collecting it runs no Spark job."""
+    import copy
+
+    from meilibridge_spark.operators.positions import match_positions
+    from meilibridge_spark.operators.relational import (
+        facet_distribution_exhaustive,
+    )
+
+    idx, pos = built
+    idx = copy.copy(idx)
+    idx.cfg = _cfg(stop_words=("the",))
+    sc = idx.postings.sparkSession.sparkContext
+    group = "test-stop-word-only-no-job"
+    sc.setJobGroup(group, group)
+    try:
+        assert phrase_search(idx, pos, "the", 10).collect() == []
+        assert match_positions(idx, "the the", positions=pos).collect() == []
+        assert facet_distribution_exhaustive(idx, "the", ["text"]).collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
